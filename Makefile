@@ -11,7 +11,7 @@
 PKG := hadoop_search_engine_spark
 DIST := dist/$(PKG).zip
 
-.PHONY: package test bench scaling contract clean
+.PHONY: package test bench perf scaling contract clean
 
 package:
 	mkdir -p dist
@@ -24,6 +24,13 @@ test:
 
 bench:
 	python bench.py
+
+# The repo benchmark's two workloads (perfbench/README.md), one
+# untraced seeded run each; the last line of each run is its JSON.
+perf:
+	for w in serve_hot refresh; do \
+		python3 perfbench/run.py --workload $$w --seed 1 --seconds 12 --trace 0 || exit 1; \
+	done
 
 scaling:
 	python bench_scaling.py

@@ -71,9 +71,9 @@ def more_like_this(
     """Find documents similar to ``doc_id``: select its top-``m``
     ``tf * idf`` terms (:func:`more_like_this_terms`) and run the
     standard disjunctive BM25 search, excluding the source document
-    from the results (over-retrieve k+1, post-filter, re-sort — the
-    same trick the tombstone path uses). ``documents`` supplies the
-    source text via one pushed-filter row fetch."""
+    from the results (over-retrieve k+1, post-filter, re-sort).
+    ``documents`` supplies the source text via one pushed-filter row
+    fetch."""
     row = (
         documents.where(F.col("doc_id") == int(doc_id))
         .select("text")

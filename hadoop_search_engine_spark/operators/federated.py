@@ -13,12 +13,12 @@ from .query_exec import (
     DL_BROADCAST_MAX_DOCS,
     SEGMENT_BATCH_TOPK_SCHEMA,
     SEGMENT_TOPK_SCHEMA,
-    TOMBSTONE_OVERFETCH_MAX,
     _driver_search_pairs,
     _empty_df,
     _execute_topk,
     _execute_topk_batch,
     _lookup_terms,
+    _tombstone_gate,
     parse_query,
 )
 
@@ -131,23 +131,15 @@ def search_topk_segments_rows(
                 f"(> {DL_BROADCAST_MAX_DOCS}): too large for driver "
                 "serving; use search_topk_segments(serving='spark')"
             )
-        tomb = None
-        tomb_n = ix.tombstone_count()
-        if tomb_n:
-            if tomb_n > TOMBSTONE_OVERFETCH_MAX:
-                raise ValueError(
-                    f"segment {i}'s tombstone set is past "
-                    f"{TOMBSTONE_OVERFETCH_MAX}; use "
-                    "search_topk_segments(serving='spark') or vacuum_index"
-                )
-            tomb = ix.tombstone_array()
-        k_eff = k + (int(tomb.size) if tomb is not None else 0)
+        tomb, _ = _tombstone_gate(
+            ix, f"search_topk_segments(serving='spark') for segment {i}"
+        )
         hit_hashes = sorted(h for h, _, _ in ordered)
         rows.extend(
             (i, d, s)
             for d, s in _driver_search_pairs(
-                ix, ordered, hit_hashes, k_eff, mode, algo,
-                exclude=tomb, final_k=k, stats=stats_g,
+                ix, ordered, hit_hashes, k, mode, algo,
+                exclude=tomb, stats=stats_g,
                 after=_segment_after(after, i),
             )
         )

@@ -878,7 +878,12 @@ def _try_impact_rows(
     resolved = _resolve_query(index, query_text, synonyms, "or", "dense",
                               k1, b)
     if resolved is None:
-        return []  # no known term: the exact empty page, like dense
+        # no known term: the exact empty page, like dense — served
+        # here, not by a fallback
+        if info is not None:
+            info.update(used=True, mode="full", seen=0, candidates=0,
+                        probes=0, expanded=0)
+        return []
     stats, ordered_terms, _ = resolved
     imp = ImpactLists.load(index)
     if imp is None:

@@ -112,7 +112,7 @@ def delete_docs(index: Index, doc_ids: DataFrame | Iterable[int]) -> int:
         _swap_dir(tmp, d)
     else:
         new.distinct().coalesce(1).write.mode("overwrite").parquet(d)
-    index._tomb = None
+    index._tomb = index._tomb_n = None  # cached tombstone array + count
     total = int(spark.read.parquet(d).count())
     return total
 

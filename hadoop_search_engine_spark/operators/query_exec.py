@@ -113,13 +113,18 @@ DL_BROADCAST_MAX_DOCS = 20_000_000
 # query costs exactly ONE Spark job.
 LEXICON_CACHE_MAX_TERMS = 2_000_000
 
-# Tombstone serving: with at most this many tombstoned docs, queries
-# over-retrieve k + |tombstones| candidates and post-filter (valid:
-# removing T docs promotes at most T new docs into the top-k), which
-# works on EVERY serving path — including driver serving with no Spark
-# job. Beyond it the query falls back to the cogroup scorer with the
+# Tombstone serving: with at most this many tombstoned docs, the
+# sorted tombstone array is a mask applied INSIDE every shard scorer
+# (each shard takes its slice with one searchsorted; dense zeroes those
+# offsets before top-k selection, WAND drops them at candidate
+# insertion so theta tracks the kth live doc), so a query selects
+# exactly k on EVERY serving path — driver serving with no Spark job,
+# and the executor scorers with the array riding in the closure.
+# Beyond it the query falls back to the cogroup scorer with the
 # tombstones anti-joined out of the doc-length page (the doc_filter
 # mechanism); vacuum_index regularly to stay under the threshold.
+# Phrase and boolean queries keep over-retrieving k + |tombstones|
+# and post-filtering up to the same limit.
 TOMBSTONE_OVERFETCH_MAX = 10_000
 
 # Driver-serving hot-postings cache budget (MB; env
@@ -131,7 +136,7 @@ TOMBSTONE_OVERFETCH_MAX = 10_000
 # the Index instance (same lifetime as the cached pyarrow dataset
 # listing), keyed by term_hash; entries are the raw stored rows
 # (parameter-free (max_tf, min_dl) block bounds), so tuned k1/b
-# queries and tombstone over-retrieve reuse them unchanged.
+# queries and the tombstone mask reuse them unchanged.
 POSTINGS_CACHE_MB_DEFAULT = 256.0
 
 # Second-level driver cache: DECODED (offsets, tf) arrays per
@@ -188,6 +193,63 @@ class _ByteLRU:
             self.nbytes -= n0
 
 
+# Postings-LRU charge per cell (an int64 / float64 value or an object
+# pointer in the cached frame) and per entry (tuple, dict slot and
+# frame header, so even a cached empty miss costs something); the
+# blobs themselves are charged by their stored length, ``n_bytes``.
+_PCACHE_CELL_BYTES = 8
+_PCACHE_ENTRY_BYTES = 128
+
+
+def _runs(keys: np.ndarray) -> list[tuple[int, int]]:
+    """``[lo, hi)`` bounds of the runs of equal values in ``keys``."""
+    cuts = [0, *(np.flatnonzero(keys[1:] != keys[:-1]) + 1).tolist(),
+            keys.size]
+    return [(lo, hi) for lo, hi in zip(cuts[:-1], cuts[1:]) if hi > lo]
+
+
+def _block_arrays(frame: pd.DataFrame) -> tuple:
+    """A posting-row frame's block columns as NumPy arrays — ``(doc_id
+    blobs, tf blobs, n_docs, first_doc_id)``, the arguments of
+    :func:`codec.decode_blocks`."""
+    return (frame["doc_ids"].to_numpy(), frame["tfs"].to_numpy(),
+            frame["n_docs"].to_numpy(np.int64),
+            frame["first_doc_id"].to_numpy(np.int64))
+
+
+def _postings_entries(pdf: pd.DataFrame, hashes: list[int]) -> dict[int, tuple]:
+    """A pruned postings read -> ``term_hash -> (frame, nbytes,
+    blocks)`` for every hash in ``hashes``: the term's rows as a
+    DataFrame sorted by shard, its cache charge (the rows' stored blob
+    length ``n_bytes`` plus a fixed size per cell and per entry — a
+    deep ``memory_usage`` would walk every blob object in Python), and
+    its block columns (:func:`_block_arrays`) split by shard: ``shard
+    -> (doc_id blobs, tf blobs, n_docs, first_doc_id)``. The columns
+    are pulled out of the read once; each term's are a NumPy take, so
+    no frame is indexed per (term, shard)."""
+    th = pdf["term_hash"].to_numpy(np.int64)
+    sh = pdf["shard"].to_numpy(np.int64)
+    order = np.lexsort((sh, th))  # by term, then shard; stable
+    th, sh = th[order], sh[order]
+    cols = _block_arrays(pdf)
+    blob = pdf["n_bytes"].to_numpy(np.int64)
+    cell = _PCACHE_CELL_BYTES * pdf.shape[1]
+    empty = pdf.iloc[0:0]
+    out = {h: (empty, _PCACHE_ENTRY_BYTES, {}) for h in hashes}
+    for lo, hi in _runs(th):
+        rows = order[lo:hi]
+        frame = pdf.take(rows)
+        frame.index = pd.RangeIndex(hi - lo)
+        term_cols = [c[rows] for c in cols]
+        term_sh = sh[lo:hi]
+        blocks = {int(term_sh[a]): tuple(c[a:b] for c in term_cols)
+                  for a, b in _runs(term_sh)}
+        nbytes = (_PCACHE_ENTRY_BYTES + cell * (hi - lo)
+                  + int(blob[rows].sum()))
+        out[int(th[lo])] = (frame, nbytes, blocks)
+    return out
+
+
 @dataclass
 class Index:
     spark: SparkSession
@@ -197,6 +259,7 @@ class Index:
     _lex_map: dict | None = None
     _pads: object = None
     _tomb: object = None
+    _tomb_n: int | None = None
     _pcache: object = None
     _pcache_nbytes: int = 0
     _tfc: object = None
@@ -355,35 +418,25 @@ class Index:
 
     def postings_rows_by_term(self, hit_hashes) -> dict[int, pd.DataFrame]:
         """Posting rows for the probed term hashes, driver-side (no
-        Spark job), one frame PER TERM: bucket = pmod(hash, B) prunes
-        at the hive file listing, term_hash is a row-group min/max
-        filter. Rows are cached per term in a byte-bounded LRU (see
-        ``POSTINGS_CACHE_MB_DEFAULT``) so repeated probes of hot terms
-        skip parquet entirely; an uncached query costs ONE dataset
-        read for all of its missing terms. The per-term shape lets the
-        dense scorer iterate terms without re-concatenating frames
-        (``pd.concat`` of blob-object columns profiled at ~20% of hot
-        query time). Cache lifetime is this Index instance — the same
-        snapshot semantics as the cached dataset listing itself
-        (vacuum/merge return a reloaded Index)."""
-        import pyarrow.dataset as pads
-
-        ds = self._postings_dataset()
-        nb = self.stats.n_buckets
+        Spark job), one frame PER TERM, rows sorted by shard: bucket =
+        pmod(hash, B) prunes at the hive file listing, term_hash is a
+        row-group min/max filter. Rows are cached per term in a
+        byte-bounded LRU (see ``POSTINGS_CACHE_MB_DEFAULT``) so repeated
+        probes of hot terms skip parquet entirely; an uncached query
+        costs ONE dataset read for all of its missing terms. The
+        per-term shape lets the dense scorer iterate terms without
+        re-concatenating frames (``pd.concat`` of blob-object columns
+        profiled at ~20% of hot query time). Each cache entry is
+        ``(frame, nbytes, blocks)``: ``nbytes`` is charged from the blob
+        lengths (see :func:`_postings_entries`), ``blocks`` is the
+        frame's block columns split by shard (:meth:`_shard_blocks`).
+        Cache lifetime is this Index instance — the same snapshot
+        semantics as the cached dataset listing itself (vacuum/merge
+        return a reloaded Index)."""
         wanted = list(dict.fromkeys(int(h) for h in hit_hashes))
         cap = _postings_cache_bytes()
         if cap <= 0:
-            filt = pads.field("bucket").isin(
-                sorted({h % nb for h in wanted})
-            ) & pads.field("term_hash").isin(wanted)
-            pdf = ds.to_table(filter=filt).to_pandas()
-            by_hash = (
-                {int(h): grp.reset_index(drop=True)
-                 for h, grp in pdf.groupby("term_hash")}
-                if not pdf.empty else {}
-            )
-            empty = pdf.iloc[0:0]
-            return {h: by_hash.get(h, empty) for h in wanted}
+            return {h: e[0] for h, e in self._read_postings(wanted).items()}
         if self._pcache is None:
             from collections import OrderedDict
 
@@ -399,36 +452,46 @@ class Index:
             else:
                 missing.append(h)
         if missing:
-            filt = pads.field("bucket").isin(
-                sorted({h % nb for h in missing})
-            ) & pads.field("term_hash").isin(missing)
-            pdf = ds.to_table(filter=filt).to_pandas()
-            by_hash = (
-                {int(h): grp for h, grp in pdf.groupby("term_hash")}
-                if not pdf.empty
-                else {}
-            )
-            empty = pdf.iloc[0:0]
-            for h in missing:
-                grp = by_hash.get(h)
-                # absent terms cache the empty frame too: a repeated
-                # miss (OOV term, stopword-stripped query) must not
-                # re-read parquet every time
-                grp = empty if grp is None else grp.reset_index(drop=True)
-                nbytes = int(grp.memory_usage(deep=True).sum())
-                cache[h] = (grp, nbytes)
-                self._pcache_nbytes += nbytes
-                out[h] = grp
+            # absent terms cache their empty entry too: a repeated miss
+            # (OOV term, stopword-stripped query) must not re-read
+            # parquet every time
+            for h, entry in self._read_postings(missing).items():
+                cache[h] = entry
+                self._pcache_nbytes += entry[1]
+                out[h] = entry[0]
             # evict least-recent past the byte budget; frames already
             # collected for THIS query stay alive via the local dict
             while self._pcache_nbytes > cap and cache:
-                _, (_, n0) = cache.popitem(last=False)
-                self._pcache_nbytes -= n0
+                _, entry = cache.popitem(last=False)
+                self._pcache_nbytes -= entry[1]
         return out
+
+    def _read_postings(self, hashes: list[int]) -> dict[int, tuple]:
+        """ONE pruned pyarrow read of ``hashes`` -> per-term cache
+        entries (:func:`_postings_entries`), absent terms included."""
+        import pyarrow.dataset as pads
+
+        nb = self.stats.n_buckets
+        filt = pads.field("bucket").isin(
+            sorted({h % nb for h in hashes})
+        ) & pads.field("term_hash").isin(hashes)
+        return _postings_entries(
+            self._postings_dataset().to_table(filter=filt).to_pandas(), hashes
+        )
+
+    def _shard_blocks(self, term_hash: int, frame: pd.DataFrame) -> dict:
+        """``frame``'s block columns split by shard (see
+        :func:`_postings_entries`), from its postings-cache entry when
+        that entry still holds this frame, else split afresh (cache
+        disabled, or entry evicted)."""
+        hit = self._pcache.get(term_hash) if self._pcache else None
+        if hit is not None and hit[0] is frame:
+            return hit[2]
+        return _postings_entries(frame, [term_hash])[term_hash][2]
 
     def postings_rows(self, hit_hashes) -> pd.DataFrame:
         """:meth:`postings_rows_by_term` concatenated back into one
-        frame — for the WAND / phrase / batch paths that group by
+        frame — for the WAND / phrase / boolean paths that group by
         shard across terms."""
         frames = list(self.postings_rows_by_term(hit_hashes).values())
         nonempty = [f for f in frames if len(f)]
@@ -471,26 +534,33 @@ class Index:
 
     def tombstone_count(self) -> int:
         """Number of tombstoned (deleted-but-not-vacuumed) doc_ids —
-        a driver-side pyarrow row count, no Spark job; 0 when the
-        index has no tombstone table."""
-        d = os.path.join(self.out_dir, "tombstones")
-        if not os.path.isdir(d):
-            return 0
-        import pyarrow.dataset as pads
+        a driver-side pyarrow row count (parquet footers, no Spark
+        job) on first use, then cached next to :meth:`tombstone_array`
+        for this Index's lifetime; 0 when the index has no tombstone
+        table. :func:`~.index_maint.delete_docs` refreshes both."""
+        if self._tomb_n is None:
+            d = os.path.join(self.out_dir, "tombstones")
+            if not os.path.isdir(d):
+                self._tomb_n = 0
+            else:
+                import pyarrow.dataset as pads
 
-        return int(pads.dataset(d, format="parquet").count_rows())
+                self._tomb_n = int(
+                    pads.dataset(d, format="parquet").count_rows()
+                )
+        return self._tomb_n
 
     def tombstone_array(self):
         """Sorted unique tombstoned doc_ids (int64), or None when the
         index has none. pyarrow driver-side load, cached per Index;
         :func:`~.index_maint.delete_docs` invalidates the cache."""
         if self._tomb is None:
-            d = os.path.join(self.out_dir, "tombstones")
-            if not os.path.isdir(d):
+            if not self.tombstone_count():
                 self._tomb = np.zeros(0, dtype=np.int64)
             else:
                 import pyarrow.dataset as pads
 
+                d = os.path.join(self.out_dir, "tombstones")
                 t = pads.dataset(d, format="parquet").to_table(
                     columns=["doc_id"]
                 )
@@ -563,6 +633,28 @@ class Index:
             ),
         }
         return out
+
+
+def _tombstone_gate(index: Index, driver_alt: str | None = None):
+    """Tombstone set for the in-scorer mask: ``(tomb, too_many)`` —
+    the sorted doc_id array every scorer masks with (None when the
+    index has no tombstones), and whether the set is past
+    ``TOMBSTONE_OVERFETCH_MAX``, where it folds into the cogroup
+    eligibility page instead. Driver-only callers name their
+    distributed alternative in ``driver_alt``; a set past the limit
+    then raises, since driver serving has no eligibility page."""
+    n = index.tombstone_count()
+    if not n:
+        return None, False
+    if n > TOMBSTONE_OVERFETCH_MAX:
+        if driver_alt is not None:
+            raise ValueError(
+                f"a tombstone set past {TOMBSTONE_OVERFETCH_MAX} needs the "
+                f"distributed cogroup scorer; use {driver_alt} or "
+                "vacuum_index to shrink the tombstones"
+            )
+        return None, True
+    return index.tombstone_array(), False
 
 
 def parse_query(
@@ -803,11 +895,12 @@ def search_topk(
 
     Tombstones (docs deleted via :func:`~.index_maint.delete_docs`)
     are excluded automatically with the same global-stats semantics:
-    small sets over-retrieve ``k + |tombstones|`` and post-filter on
-    any serving path; sets past ``TOMBSTONE_OVERFETCH_MAX`` (or any
-    combination with ``doc_filter``) fold into the cogroup
-    eligibility page. ``vacuum_index`` purges them physically and
-    refreshes the statistics.
+    a set within ``TOMBSTONE_OVERFETCH_MAX`` is an eligibility mask
+    applied inside every shard scorer before top-k selection (like
+    ``after``), on every serving path and algorithm and combined with
+    ``doc_filter`` — each shard selects exactly k; a larger set folds
+    into the cogroup eligibility page. ``vacuum_index`` purges them
+    physically and refreshes the statistics.
     """
     if serving not in ("auto", "driver", "spark"):
         raise ValueError(f"serving must be auto|driver|spark, got {serving!r}")
@@ -952,14 +1045,7 @@ def scored_docs_pairs(
         )
     term_fns = _similarity_term_fns(index, similarity, query_text, synonyms,
                                     boost=boost)
-    tomb = None
-    if index.tombstone_count():
-        if index.tombstone_count() > TOMBSTONE_OVERFETCH_MAX:
-            raise ValueError(
-                "tombstone set too large for driver serving; use "
-                "scored_docs or vacuum_index"
-            )
-        tomb = index.tombstone_array()
+    tomb, _ = _tombstone_gate(index, "scored_docs")
     hit_hashes = sorted(h for h, _, _ in ordered_terms)
     k_all = stats.num_shards * stats.shard_span
     return _driver_search_pairs(
@@ -1058,8 +1144,9 @@ def search_topk_rows(
     Same constraints as driver serving: the index must fit the
     driver-pinned doc-norms array, and tombstone sets past
     ``TOMBSTONE_OVERFETCH_MAX`` need the distributed scorer (use
-    :func:`search_topk` / ``vacuum_index``). No ``doc_filter`` —
-    filtered search is cogroup-only."""
+    :func:`search_topk` / ``vacuum_index``); smaller sets are masked
+    inside the shard scorers, which select exactly k. No
+    ``doc_filter`` — filtered search is cogroup-only."""
     after = _check_after(after)
     resolved = _resolve_query(index, query_text, synonyms, mode, algorithm,
                               k1, b)
@@ -1071,24 +1158,13 @@ def search_topk_rows(
             f"index has {stats.n_docs} docs (> {DL_BROADCAST_MAX_DOCS}): too "
             "large for driver serving; use search_topk(serving='spark')"
         )
-    tomb = None
-    tomb_n = index.tombstone_count()
-    if tomb_n:
-        if tomb_n > TOMBSTONE_OVERFETCH_MAX:
-            raise ValueError(
-                f"a tombstone set past {TOMBSTONE_OVERFETCH_MAX} needs the "
-                "distributed cogroup scorer; use search_topk(serving="
-                "'spark') or vacuum_index to shrink the tombstones"
-            )
-        tomb = index.tombstone_array()
-    k_eff = k + (int(tomb.size) if tomb is not None else 0)
+    tomb, _ = _tombstone_gate(index, "search_topk(serving='spark')")
     hit_hashes = sorted(h for h, _, _ in ordered_terms)
     term_fns = _similarity_term_fns(index, similarity, query_text, synonyms,
                                     k1=k1, b=b)
     return _driver_search_pairs(
-        index, ordered_terms, hit_hashes, k_eff, mode, algorithm,
-        exclude=tomb, final_k=k, stats=stats, after=after,
-        term_fns=term_fns,
+        index, ordered_terms, hit_hashes, k, mode, algorithm,
+        exclude=tomb, stats=stats, after=after, term_fns=term_fns,
     )
 
 
@@ -1119,22 +1195,11 @@ def _execute_topk(
     )
 
     # Tombstoned (deleted-but-not-vacuumed) docs never appear in
-    # results. Small sets ride every serving path via over-retrieve +
-    # post-filter; large sets (or combination with a doc_filter) fold
-    # into the cogroup scorer's eligibility page.
-    tomb = None
-    exclude_df = None
-    tomb_n = index.tombstone_count()
-    if tomb_n:
-        if doc_filter is not None:
-            doc_filter = doc_filter.join(
-                index.tombstones, "doc_id", "left_anti"
-            )
-        elif tomb_n > TOMBSTONE_OVERFETCH_MAX:
-            exclude_df = index.tombstones
-        else:
-            tomb = index.tombstone_array()
-    k_eff = k + (int(tomb.size) if tomb is not None else 0)
+    # results. A small set is masked inside every shard scorer (driver
+    # or executor: the array rides in the scorer closure); a large set
+    # folds into the cogroup scorer's eligibility page.
+    tomb, too_many = _tombstone_gate(index)
+    exclude_df = index.tombstones if too_many else None
 
     if doc_filter is not None or exclude_df is not None:
         if serving == "driver":
@@ -1159,7 +1224,7 @@ def _execute_topk(
             )
         scorer = _make_shard_scorer(ordered_terms, stats, k, "dense",
                                     mode=mode, require_dl=True, after=after,
-                                    term_fns=term_fns)
+                                    term_fns=term_fns, tomb=tomb)
         per_shard = (
             blocks.repartition(n_parts, "shard")
             .groupBy("shard")
@@ -1183,8 +1248,8 @@ def _execute_topk(
         and index.lexicon_map() is not None
     ):
         return _driver_search(
-            index, ordered_terms, buckets, hit_hashes, k_eff, mode,
-            algorithm, exclude=tomb, final_k=k, stats=stats, after=after,
+            index, ordered_terms, buckets, hit_hashes, k, mode,
+            algorithm, exclude=tomb, stats=stats, after=after,
             term_fns=term_fns,
         )
 
@@ -1202,9 +1267,9 @@ def _execute_topk(
     if dl_bc is not None:
         # fast path: doc lengths are a session-broadcast dense array;
         # one job, no dl shuffle, no cogroup.
-        scorer = _make_shard_scorer(ordered_terms, stats, k_eff, algorithm,
+        scorer = _make_shard_scorer(ordered_terms, stats, k, algorithm,
                                     dl_bc=dl_bc, mode=mode, after=after,
-                                    term_fns=term_fns)
+                                    term_fns=term_fns, tomb=tomb)
         per_shard = (
             blocks.repartition(n_parts, "shard")
             .groupBy("shard")
@@ -1216,18 +1281,14 @@ def _execute_topk(
         # partitionBy("shard") layout.
         shards = blocks.select("shard").distinct()
         dls = index.doc_stats.join(F.broadcast(shards), "shard", "left_semi")
-        scorer = _make_shard_scorer(ordered_terms, stats, k_eff, algorithm,
+        scorer = _make_shard_scorer(ordered_terms, stats, k, algorithm,
                                     mode=mode, after=after,
-                                    term_fns=term_fns)
+                                    term_fns=term_fns, tomb=tomb)
         per_shard = (
             blocks.repartition(n_parts, "shard")
             .groupBy("shard")
             .cogroup(dls.repartition(n_parts, "shard").groupBy("shard"))
             .applyInPandas(scorer, schema=TOPK_SCHEMA)
-        )
-    if tomb is not None:
-        per_shard = per_shard.join(
-            F.broadcast(index.tombstones), "doc_id", "left_anti"
         )
     if not merge_topk:
         return per_shard
@@ -1284,8 +1345,9 @@ def search_topk_batch(
     ``serving="driver"`` reads the union filter once via pyarrow and
     scores every query with no Spark job at all; ``"auto"`` picks it
     under the same thresholds as :func:`search_topk`. Tombstones ride
-    the same over-retrieve + post-filter (small sets) or cogroup
-    eligibility page (large sets) as the single-query path.
+    the same in-scorer mask (sets within ``TOMBSTONE_OVERFETCH_MAX``)
+    or cogroup eligibility page (larger sets) as the single-query
+    path.
     """
     if serving not in ("auto", "driver", "spark"):
         raise ValueError(f"serving must be auto|driver|spark, got {serving!r}")
@@ -1378,21 +1440,10 @@ def search_topk_batch_rows(
             f"index has {stats.n_docs} docs (> {DL_BROADCAST_MAX_DOCS}): too "
             "large for driver serving; use search_topk_batch(serving='spark')"
         )
-    tomb = None
-    tomb_n = index.tombstone_count()
-    if tomb_n:
-        if tomb_n > TOMBSTONE_OVERFETCH_MAX:
-            raise ValueError(
-                f"a tombstone set past {TOMBSTONE_OVERFETCH_MAX} needs the "
-                "distributed cogroup scorer; use search_topk_batch(serving="
-                "'spark') or vacuum_index to shrink the tombstones"
-            )
-        tomb = index.tombstone_array()
-    k_eff = k + (int(tomb.size) if tomb is not None else 0)
+    tomb, _ = _tombstone_gate(index, "search_topk_batch(serving='spark')")
     all_hashes = sorted({h for _, ot in per_q for h, _, _ in ot})
     return _driver_search_batch_pairs(
-        index, per_q, all_hashes, k_eff, mode,
-        exclude=tomb, final_k=k, stats=stats,
+        index, per_q, all_hashes, k, mode, exclude=tomb, stats=stats,
     )
 
 
@@ -1414,15 +1465,8 @@ def _execute_topk_batch(
         F.col("bucket").isin(buckets) & F.col("term_hash").isin(all_hashes)
     )
 
-    tomb = None
-    exclude_df = None
-    tomb_n = index.tombstone_count()
-    if tomb_n:
-        if tomb_n > TOMBSTONE_OVERFETCH_MAX:
-            exclude_df = index.tombstones
-        else:
-            tomb = index.tombstone_array()
-    k_eff = k + (int(tomb.size) if tomb is not None else 0)
+    tomb, too_many = _tombstone_gate(index)
+    exclude_df = index.tombstones if too_many else None
 
     if exclude_df is None and (
         serving == "driver"
@@ -1436,8 +1480,8 @@ def _execute_topk_batch(
                 "too large for driver serving; use serving='spark' (or 'auto')"
             )
         return _driver_search_batch(
-            index, per_q, buckets, all_hashes, k_eff, mode,
-            exclude=tomb, final_k=k, stats=stats,
+            index, per_q, buckets, all_hashes, k, mode, exclude=tomb,
+            stats=stats,
         )
     if serving == "driver":  # exclude_df set: needs the cogroup page
         raise ValueError(
@@ -1450,8 +1494,8 @@ def _execute_topk_batch(
                          spark.sparkContext.defaultParallelism))
     dl_bc = index.dl_broadcast() if exclude_df is None else None
     scorer = _make_batch_shard_scorer(
-        per_q, stats, k_eff, dl_bc=dl_bc, mode=mode,
-        require_dl=exclude_df is not None,
+        per_q, stats, k, dl_bc=dl_bc, mode=mode,
+        require_dl=exclude_df is not None, tomb=tomb,
     )
     if dl_bc is not None:
         per_shard = (
@@ -1470,10 +1514,6 @@ def _execute_topk_batch(
             .cogroup(dls.repartition(n_parts, "shard").groupBy("shard"))
             .applyInPandas(scorer, schema=BATCH_TOPK_SCHEMA)
         )
-    if tomb is not None:
-        per_shard = per_shard.join(
-            F.broadcast(index.tombstones), "doc_id", "left_anti"
-        )
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("query_id").orderBy(
@@ -1490,12 +1530,13 @@ def _execute_topk_batch(
 def _make_batch_shard_scorer(
     per_query_terms: list[tuple[str, list[tuple[int, str, float]]]],
     stats: IndexStats, k: int, dl_bc=None, mode: str = "or",
-    require_dl: bool = False,
+    require_dl: bool = False, tomb: np.ndarray | None = None,
 ):
     """One-shard scorer for the batch path: a per-shard decode cache
     shares each term's block decode and idf-free partial across
     queries; every query then runs the same dense accumulation as its
-    single-query call (see :func:`_score_dense`'s cache note)."""
+    single-query call (see :func:`_score_dense`'s cache note), with
+    the same in-scorer tombstone mask."""
     k1, b, avgdl = stats.k1, stats.b, stats.avgdl
     span = stats.shard_span
 
@@ -1507,12 +1548,14 @@ def _make_batch_shard_scorer(
 
     def _score_all(left: pd.DataFrame, dl: np.ndarray, base: int) -> pd.DataFrame:
         cache: dict = {}
+        rows_for = _block_columns(left)
         frames = []
         for qid, ordered in per_query_terms:
             required = len(ordered) if mode == "and" else 0
             pairs = _score_dense(
-                left, dl, base, ordered, k1, b, avgdl, k, required,
+                None, dl, base, ordered, k1, b, avgdl, k, required,
                 require_dl=require_dl, decode_cache=cache,
+                rows_for=rows_for, tomb=tomb,
             )
             if pairs:
                 f = pd.DataFrame(pairs, columns=["doc_id", "score"])
@@ -1556,7 +1599,6 @@ def _driver_search_batch(
     k: int,
     mode: str,
     exclude=None,
-    final_k: int | None = None,
     stats: IndexStats | None = None,
 ) -> DataFrame:
     """Batch driver serving: ONE bucket-pruned pyarrow read of the
@@ -1564,7 +1606,7 @@ def _driver_search_batch(
     cache scores all queries — no Spark job (cf. :func:`_driver_search`)."""
     per_qid = _driver_search_batch_pairs(
         index, per_query_terms, hit_hashes, k, mode,
-        exclude=exclude, final_k=final_k, stats=stats,
+        exclude=exclude, stats=stats,
     )
     spark = index.spark
     rows = [
@@ -1580,6 +1622,29 @@ def _driver_search_batch(
     return spark.createDataFrame(out)
 
 
+def _driver_shards(index: Index, hit_hashes: list[int], span: int):
+    """Per-shard inputs of the driver dense scorers: yields ``(shard,
+    base, dl, rows_for)`` for every shard holding a probed term, where
+    ``rows_for(term_hash)`` returns the term's block columns in that
+    shard (or None). Rows come through :meth:`Index.postings_rows_by_term`
+    (the hot LRU) as per-term NumPy columns split by shard — no pandas
+    indexing per (term, shard)."""
+    frames = index.postings_rows_by_term(hit_hashes)
+    blocks = {h: index._shard_blocks(h, f) for h, f in frames.items()}
+    arr = index.dl_array()
+    for s in sorted({s for bs in blocks.values() for s in bs}):
+        base = s * span
+        dl = arr[base : base + span]
+        if dl.shape[0] < span:
+            dl = np.concatenate([dl, np.zeros(span - dl.shape[0])])
+
+        def rows_for(th, _s=s):
+            bs = blocks.get(th)
+            return None if bs is None else bs.get(_s)
+
+        yield s, base, dl, rows_for
+
+
 def _driver_search_batch_pairs(
     index: Index,
     per_query_terms: list[tuple[str, list[tuple[int, str, float]]]],
@@ -1587,46 +1652,35 @@ def _driver_search_batch_pairs(
     k: int,
     mode: str,
     exclude=None,
-    final_k: int | None = None,
     stats: IndexStats | None = None,
 ) -> dict[str, list[tuple[int, float]]]:
     """Batch driver core: shared postings read (hot LRU) + per-shard
     shared decode, returning ``{query_id: [(doc_id, score)]}`` —
-    per-query results bit-identical to single-query serving."""
+    per-query results bit-identical to single-query serving.
+    ``exclude`` (sorted tombstoned doc_ids) is masked inside the
+    scorer."""
     stats = stats if stats is not None else index.stats
-    pdf = index.postings_rows(hit_hashes)
-    if pdf.empty:
-        return {}
-    arr = index.dl_array()
-    span = stats.shard_span
+    tfc = index._tf_cache()
     per_qid: dict[str, list[tuple[int, float]]] = {
         qid: [] for qid, _ in per_query_terms
     }
-    for shard, grp in pdf.groupby("shard"):
-        base = int(shard) * span
-        dl = arr[base : base + span]
-        if dl.shape[0] < span:
-            dl = np.concatenate([dl, np.zeros(span - dl.shape[0])])
+    shards = list(_driver_shards(index, hit_hashes, stats.shard_span))
+    if not shards:
+        return {}
+    for s, base, dl, rows_for in shards:
         cache: dict = {}
         for qid, ordered in per_query_terms:
             required = len(ordered) if mode == "and" else 0
             per_qid[qid].extend(
-                _score_dense(grp, dl, base, ordered, stats.k1, stats.b,
+                _score_dense(None, dl, base, ordered, stats.k1, stats.b,
                              stats.avgdl, k, required, decode_cache=cache,
-                             tf_cache=index._tf_cache(), shard=int(shard))
+                             tf_cache=tfc, shard=s, rows_for=rows_for,
+                             tomb=exclude)
             )
-    dead = set(int(i) for i in exclude) if exclude is not None else None
-    out: dict[str, list[tuple[int, float]]] = {}
-    for qid, _ in per_query_terms:
-        pairs = per_qid[qid]
-        if dead:
-            pairs = [p for p in pairs if int(p[0]) not in dead]
+    for pairs in per_qid.values():
         pairs.sort(key=lambda e: (-e[1], e[0]))
-        out[qid] = [
-            (int(d), float(s))
-            for d, s in pairs[: (final_k if final_k is not None else k)]
-        ]
-    return out
+        del pairs[k:]
+    return per_qid
 
 
 def _driver_search_pairs(
@@ -1645,51 +1699,38 @@ def _driver_search_pairs(
 ) -> list[tuple[int, float]]:
     """Driver-side serving core: read ONLY the probed posting rows via
     the per-Index pyarrow dataset / hot-postings LRU
-    (:meth:`Index.postings_rows` — bucket prunes at the file listing,
-    term_hash is a row-group min/max filter) and score with the same
-    NumPy segment scorer the executors run. Returns plain
-    ``[(doc_id, score)]`` pairs; no Spark job, no DataFrame."""
+    (:meth:`Index.postings_rows_by_term` — bucket prunes at the file
+    listing, term_hash is a row-group min/max filter) and score with
+    the same NumPy shard scorers the executors run. Returns plain
+    ``[(doc_id, score)]`` pairs; no Spark job, no DataFrame.
+
+    ``exclude`` is the sorted tombstone array: the dense and WAND
+    scorers mask it inside each shard, so they select exactly ``k``.
+    A ``pairs_fn`` scorer (phrase / boolean) over-retrieves
+    ``k + |tombstones|`` instead; its pairs are post-filtered here and
+    cut to ``final_k``."""
     stats = stats if stats is not None else index.stats
     required = len(ordered_terms) if mode == "and" else 0
-    arr = index.dl_array()
     span = stats.shard_span
     pairs: list[tuple[int, float]] = []
     if pairs_fn is None and algorithm == "dense":
-        # dense fast path: per-term cached frames, no pd.concat (the
-        # blob-object concat profiled at ~20% of hot query time); with
-        # the decoded-(off, tf) LRU hot, frames are only touched to
-        # list each term's shards
-        frames = index.postings_rows_by_term(hit_hashes)
+        # dense fast path: per-term cached block columns, no pd.concat
+        # (the blob-object concat profiled at ~20% of hot query time)
+        # and no pandas indexing per (term, shard); with the
+        # decoded-(off, tf) LRU hot, the columns are not touched
         tfc = index._tf_cache()
-        shard_ids = sorted({
-            int(s)
-            for f in frames.values() if len(f)
-            for s in np.unique(f["shard"].to_numpy(np.int64))
-        })
-        for s in shard_ids:
-            base = s * span
-            dl = arr[base : base + span]
-            if dl.shape[0] < span:
-                dl = np.concatenate([dl, np.zeros(span - dl.shape[0])])
-
-            def rows_for(th, _s=s):
-                f = frames.get(th)
-                if f is None or not len(f):
-                    return f if f is not None else pd.DataFrame()
-                m = f["shard"].to_numpy(np.int64) == _s
-                return f[m] if m.any() else f.iloc[0:0]
-
+        for s, base, dl, rows_for in _driver_shards(index, hit_hashes, span):
             pairs.extend(
                 _score_dense(None, dl, base, ordered_terms, stats.k1,
                              stats.b, stats.avgdl, k, required,
                              tf_cache=tfc, shard=s, rows_for=rows_for,
-                             after=after, term_fns=term_fns)
+                             after=after, term_fns=term_fns, tomb=exclude)
             )
     else:
         pdf = index.postings_rows(hit_hashes)
         if pdf.empty:
             return []
-        score_fn = _score_dense if algorithm == "dense" else _score_wand
+        arr = index.dl_array()
         for shard, grp in pdf.groupby("shard"):
             base = int(shard) * span
             dl = arr[base : base + span]
@@ -1699,16 +1740,14 @@ def _driver_search_pairs(
                 pairs.extend(pairs_fn(grp, dl, base))
             else:
                 pairs.extend(
-                    score_fn(grp, dl, base, ordered_terms, stats.k1,
-                             stats.b, stats.avgdl, k, required, after=after,
-                             term_fns=term_fns)
+                    _score_wand(grp, dl, base, ordered_terms, stats.k1,
+                                stats.b, stats.avgdl, k, required,
+                                after=after, term_fns=term_fns,
+                                tomb=exclude)
                 )
-    if exclude is not None and pairs:
-        # tombstone mask, still driver-side (no Spark job): the
-        # scorers over-retrieved k + |tombstones| per shard, so the
-        # surviving top final_k is exact.
-        dead = set(int(i) for i in exclude)
-        pairs = [p for p in pairs if int(p[0]) not in dead]
+        if pairs_fn is not None and exclude is not None and pairs:
+            dead = set(exclude.tolist())
+            pairs = [p for p in pairs if int(p[0]) not in dead]
     pairs.sort(key=lambda e: (-e[1], e[0]))
     return [
         (int(d), float(s))
@@ -1755,14 +1794,17 @@ def _make_shard_scorer(ordered_terms: list[tuple[int, str, float]],
                        dl_bc=None, mode: str = "or", pairs_fn=None,
                        require_dl: bool = False,
                        after: tuple[int, float] | None = None,
-                       term_fns: dict | None = None):
+                       term_fns: dict | None = None,
+                       tomb: np.ndarray | None = None):
     """Scorer for one shard. With ``dl_bc`` (broadcast dense doc_len
     array) it is an ``applyInPandas`` group function over blocks only;
     without, a cogroup function joining blocks with the shard's dl rows.
     ``pairs_fn(left, dl, base) -> [(doc_id, score)]`` overrides the
     default dense/WAND scoring (used by phrase_search). ``require_dl``
     (filtered search, dense only) drops docs whose dl-page entry is
-    absent — the page then IS the eligibility mask."""
+    absent — the page then IS the eligibility mask. ``tomb`` (sorted
+    tombstoned doc_ids, at most ``TOMBSTONE_OVERFETCH_MAX``) rides in
+    the closure and is masked inside the dense/WAND scorer."""
     if require_dl and (algorithm != "dense" or dl_bc is not None):
         raise ValueError("require_dl implies the dense cogroup scorer")
     k1, b, avgdl = stats.k1, stats.b, stats.avgdl
@@ -1775,10 +1817,11 @@ def _make_shard_scorer(ordered_terms: list[tuple[int, str, float]],
         elif algorithm == "dense":
             pairs = _score_dense(left, dl, base, ordered_terms, k1, b, avgdl,
                                  k, required, require_dl=require_dl,
-                                 after=after, term_fns=term_fns)
+                                 after=after, term_fns=term_fns, tomb=tomb)
         else:
             pairs = _score_wand(left, dl, base, ordered_terms, k1, b, avgdl,
-                                k, required, after=after, term_fns=term_fns)
+                                k, required, after=after, term_fns=term_fns,
+                                tomb=tomb)
         return pd.DataFrame(pairs, columns=["doc_id", "score"]).astype(
             {"doc_id": "int64", "score": "float64"}
         )
@@ -1867,6 +1910,32 @@ def _topk_pairs(
     return [(int(doc_ids[i]), float(scores[i])) for i in order]
 
 
+def _shard_tombstones(tomb, base: int, span: int) -> np.ndarray | None:
+    """The tombstoned doc_ids in ``[base, base + span)`` — one
+    searchsorted pair over the sorted tombstone array — or None when
+    the shard has none."""
+    if tomb is None:
+        return None
+    lo, hi = np.searchsorted(tomb, (base, base + span))
+    return tomb[lo:hi] if hi > lo else None
+
+
+def _block_columns(left: pd.DataFrame):
+    """``rows_for`` over one shard's posting-row frame: the frame's
+    columns are pulled out as NumPy arrays once, and each term's rows
+    are a boolean take on those arrays — no pandas indexing per term.
+    Returns ``term_hash -> (doc_id blobs, tf blobs, n_docs,
+    first_doc_id)`` or None for a term with no rows here."""
+    hashes = left["term_hash"].to_numpy(np.int64)
+    cols = _block_arrays(left)
+
+    def rows_for(th):
+        m = hashes == th
+        return tuple(c[m] for c in cols) if m.any() else None
+
+    return rows_for
+
+
 def _score_dense(
     left: pd.DataFrame, dl: np.ndarray, base: int,
     ordered_terms: list[tuple[int, str, float]],
@@ -1879,15 +1948,19 @@ def _score_dense(
     rows_for=None,
     after: tuple[int, float] | None = None,
     term_fns: dict | None = None,
+    tomb: np.ndarray | None = None,
 ) -> list[tuple[int, float]]:
+    """Dense accumulator over one shard. ``rows_for(term_hash)``
+    returns the term's block columns in this shard
+    (:func:`_block_arrays`; :func:`_block_columns` over ``left`` by
+    default) or None.
+    ``tomb`` (sorted tombstoned doc_ids, whole index) is an
+    eligibility mask applied before top-k selection, like ``after``."""
     span = dl.shape[0]
     scores = np.zeros(span, dtype=np.float64)
     nterms = np.zeros(span, dtype=np.int32)
     if rows_for is None:
-        hashes = left["term_hash"].to_numpy(np.int64)
-
-        def rows_for(th, _l=left, _h=hashes):
-            return _l[_h == th]
+        rows_for = _block_columns(left)
 
     present = 0
     # ordered_terms is in ascending term-string order => per-doc
@@ -1910,13 +1983,9 @@ def _score_dense(
         if got is None:
             dt = None if tf_cache is None else tf_cache.get((th, shard))
             if dt is None:
-                grp = rows_for(th)
-                if len(grp):
-                    d, t, _ = codec.decode_blocks(
-                        grp["doc_ids"].tolist(), grp["tfs"].tolist(),
-                        grp["n_docs"].to_numpy(np.int64),
-                        grp["first_doc_id"].to_numpy(np.int64),
-                    )
+                cols = rows_for(th)
+                if cols is not None:
+                    d, t, _ = codec.decode_blocks(*cols)
                     dt = (d - base, t)
                 else:
                     dt = ()
@@ -1942,12 +2011,12 @@ def _score_dense(
         present += 1
         scores[off] += part if term_fns is not None else idf * part
         nterms[off] += 1
-    if required:
-        if present < required:
-            return []  # a required term has no postings in this shard
-        idx = np.flatnonzero(nterms >= required)
-    else:
-        idx = np.flatnonzero(nterms > 0)
+    if required and present < required:
+        return []  # a required term has no postings in this shard
+    dead = _shard_tombstones(tomb, base, span)
+    if dead is not None:
+        nterms[dead - base] = 0  # tombstoned: matches nothing
+    idx = np.flatnonzero(nterms >= required if required else nterms)
     if require_dl:
         # filtered search: the dl page holds ONLY eligible docs, so a
         # zero entry means "filtered out" (a doc with postings always
@@ -2014,13 +2083,15 @@ def _score_wand(
     required: int = 0,
     after: tuple[int, float] | None = None,
     term_fns: dict | None = None,
+    tomb: np.ndarray | None = None,
 ) -> list[tuple[int, float]]:
     """Block-max WAND over one shard, segment-vectorized.
 
-    ``after`` (cursor pagination) masks candidates at insertion — theta
-    then tracks the kth best ELIGIBLE doc, so the segment-bound pruning
-    stays exact for the page being served (a pruned segment cannot
-    contain an eligible doc above theta).
+    ``after`` (cursor pagination) and ``tomb`` (sorted tombstoned
+    doc_ids) mask candidates at insertion — theta then tracks the kth
+    best ELIGIBLE doc, so the segment-bound pruning stays exact for
+    the page being served (a pruned segment cannot contain an
+    eligible doc above theta).
 
     Classic per-doc DAAT WAND spends microseconds of Python per pivot —
     at web-corpus dfs that is seconds per head-term query. Here the
@@ -2088,6 +2159,7 @@ def _score_wand(
         return []
     order = eligible[np.lexsort((eligible, -seg_ub[eligible]))]
 
+    dead = _shard_tombstones(tomb, base, dl.shape[0])
     best_docs = np.empty(0, dtype=np.int64)
     best_scores = np.empty(0, dtype=np.float64)
     theta = -np.inf
@@ -2116,6 +2188,9 @@ def _score_wand(
                     tf[s0:s1], dl[dseg - base], k1, b, avgdl
                 )
             ntouch[off] += 1
+        if dead is not None:
+            d0, d1 = np.searchsorted(dead, (lo, hi))
+            ntouch[dead[d0:d1] - lo] = 0  # tombstoned: not a candidate
         idx = np.flatnonzero(ntouch >= required) if required else np.flatnonzero(ntouch)
         if not idx.size:
             continue

@@ -315,13 +315,11 @@ def search_time_range(
         name = names[i]
         if name not in boundary:
             if serving == "driver":
-                tomb = ix.tombstone_array() if ix.tombstone_count() else None
-                k_eff = k + (int(tomb.size) if tomb is not None else 0)
                 rows.extend(
                     (name, d, s)
                     for d, s in _driver_search_pairs(
                         ix, ordered, sorted(h for h, _, _ in ordered),
-                        k_eff, mode, algo, exclude=tomb, final_k=k,
+                        k, mode, algo, exclude=ix.tombstone_array(),
                         stats=stats_g,
                     )
                 )
@@ -344,9 +342,7 @@ def search_time_range(
             k_all = ix.stats.num_shards * ix.stats.shard_span
             pairs = _driver_search_pairs(
                 ix, ordered, sorted(h for h, _, _ in ordered), k_all,
-                mode, "dense",
-                exclude=(ix.tombstone_array() if ix.tombstone_count()
-                         else None),
+                mode, "dense", exclude=ix.tombstone_array(),
                 stats=stats_g,
             )
             if pairs:

@@ -179,7 +179,7 @@ def main(argv: list[str] | None = None) -> None:
     if not (args.delete or args.delete_file or args.delete_query
             or args.vacuum or args.report
             or args.merge or args.reshard or args.prune
-            or args.build_impact):
+            or args.build_impact is not None):
         ap.error(
             "nothing to do: pass --delete/--delete-file/--delete-query/"
             "--vacuum/--merge/--reshard/--prune/--plan-compaction/"
@@ -248,7 +248,7 @@ def main(argv: list[str] | None = None) -> None:
         print("vacuum: done")
     if args.report:
         print(json.dumps(idx.report(), indent=2))
-    if args.build_impact:
+    if args.build_impact is not None:
         from hadoop_search_engine_spark.operators.impact import (
             build_impact_lists,
         )

@@ -463,3 +463,26 @@ def test_cli_build_and_serve(imp_index, tmp_path, capsys):
         [ln for ln in out.splitlines() if ln.startswith("[")][-1]
     )]
     assert got == search_topk_rows(ix, head[0], k=5, algorithm="dense")
+
+
+def test_cli_build_impact_zero_reaches_validation(imp_index, tmp_path):
+    """``--build-impact 0`` is a value, not an absent flag: alone or
+    beside another action it must reach build_impact_lists' m >= 1
+    check instead of being skipped as falsy."""
+    from jobs.maintain import main as maintain_main
+
+    d2 = str(tmp_path / "ixzero")
+    shutil.copytree(imp_index.out_dir, d2)
+    with pytest.raises(ValueError, match="m must be >= 1"):
+        maintain_main(["--index", d2, "--build-impact", "0"])
+    with pytest.raises(ValueError, match="m must be >= 1"):
+        maintain_main(["--index", d2, "--report", "--build-impact", "0"])
+
+
+def test_no_known_term_page_is_served_not_fallback(imp_index):
+    """A query with no lexicon term is answered by the champion path
+    itself (the exact empty page): info must say so."""
+    info: dict = {}
+    assert impact_topk_rows(imp_index, "zzqqxnotaterm", k=5, info=info) == []
+    assert info["used"] and info["mode"] == "full"
+    assert info["seen"] == info["candidates"] == info["probes"] == 0

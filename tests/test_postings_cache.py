@@ -11,8 +11,9 @@ analog). These tests pin the cache's contract:
   * eviction under an adversarially tiny byte budget never changes
     results and the budget invariant (bytes <= cap, or cache empty)
     holds after every probe;
-  * tombstones land AFTER the cache (over-retrieve + mask), so a
-    delete between two probes of the same hot term is respected;
+  * tombstones land AFTER the cache (masked inside the shard scorer,
+    which still selects exactly k), so a delete between two probes of
+    the same hot term is respected;
   * absent terms cache an empty frame (a repeated OOV miss must not
     re-read parquet every time).
 """
