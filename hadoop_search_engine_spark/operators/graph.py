@@ -53,9 +53,13 @@ def pagerank(
         raise ValueError("damping_pct must be in (0, 100)")
     if n_iters < 1:
         raise ValueError("n_iters must be >= 1")
+    # checkpointed, like every rank below: a persisted DataFrame still
+    # carries its whole logical plan, which each iteration re-analyzes
+    # and re-plans (link extraction UDFs, id joins and all earlier
+    # iterations), so cost grew with the iteration count
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    )
+    ).localCheckpoint()
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -77,8 +81,7 @@ def pagerank(
     teleport = F.lit(((100 - damping_pct) * (SCALE // n)) // 100).cast(
         "long"
     )
-    rank = nd.select("node", "deg", base.alias("rank")).persist()
-    rank.count()
+    rank = nd.select("node", "deg", base.alias("rank")).localCheckpoint()
     for _ in range(n_iters):
         dangling = (
             rank.where(F.col("deg") == 0)
@@ -109,9 +112,8 @@ def pagerank(
                     )
                 ).alias("rank"),
             )
-            .persist()
+            .localCheckpoint()  # materialized; the lineage stays flat
         )
-        new_rank.count()  # materialize: keep the lineage flat
         rank.unpersist()
         rank = new_rank
     out = rank.select("node", F.col("rank").alias("rank_units"))
