@@ -172,7 +172,7 @@ def main() -> None:
     timings["fixture_p95"] = round(ls[int(0.95 * (len(ls) - 1))], 4)
 
     # same 50 queries again, now HOT: the first pass filled the
-    # per-Index postings LRU (Index.postings_rows), so this pass is
+    # per-Index postings LRU (Index.postings_rows_by_term), so this pass is
     # the steady-state serving-node shape — Zipfian-hot terms score
     # straight from pinned rows, no parquet read
     lat = []

@@ -56,13 +56,13 @@ from pyspark.sql import DataFrame, functions as F
 from ..functions import codec
 from ..functions.tokenizer import tokenize
 from .query_exec import (
-    TOMBSTONE_OVERFETCH_MAX,
     TOPK_SCHEMA,
     Index,
-    _driver_search,
+    _Query,
     _empty_df,
+    _execute,
     _lookup_terms,
-    _make_shard_scorer,
+    _overfetch_k,
     _partial,
     _topk_pairs,
 )
@@ -320,19 +320,13 @@ def search_topk_boolean(
     predicate projection) composes EXACTLY by disabling the per-shard
     cut — every boolean-eligible doc is scored (the ``scored_docs``
     cost class, proportional to the query terms' df), the filter
-    applies as a distributed semi-join, and the top-k follows — a doc
-    the filter admits can never be displaced by one it rejects.
+    rides the cogroup eligibility page (pairs of docs absent from it
+    are dropped), and the top-k follows — a doc the filter admits can
+    never be displaced by one it rejects.
     Distributed serving only (the filter is a DataFrame).
     """
     if serving not in ("auto", "driver", "spark"):
         raise ValueError(f"serving must be auto|driver|spark, got {serving!r}")
-    if doc_filter is not None:
-        if serving == "driver":
-            raise ValueError(
-                "doc_filter needs distributed serving (the eligibility "
-                "frame is a DataFrame); use serving='spark'"
-            )
-        serving = "spark"
     spark = index.spark
     stats = index.stats
     if k1 is not None or b is not None:
@@ -363,24 +357,7 @@ def search_topk_boolean(
     if not ordered_terms:
         return _empty_df(spark, TOPK_SCHEMA)  # nothing can score > 0
 
-    # the postings scan needs every PRESENT leaf (negative terms too:
-    # their presence vectors are what NOT complements)
-    hit_hashes = sorted(
-        int(m["hash"]) for t, m in meta.items()
-    )
-    buckets = sorted({int(m["bucket"]) for m in meta.values()})
-
-    tomb = None
-    tomb_n = index.tombstone_count()
-    if tomb_n:
-        if tomb_n > TOMBSTONE_OVERFETCH_MAX:
-            raise ValueError(
-                f"{tomb_n} tombstones exceed the boolean-search "
-                f"over-retrieve limit ({TOMBSTONE_OVERFETCH_MAX}); run "
-                "vacuum_index first"
-            )
-        tomb = index.tombstone_array()
-    k_eff = k + (int(tomb.size) if tomb is not None else 0)
+    k_eff = _overfetch_k(index, k, "boolean-search")
     if doc_filter is not None:
         # no per-shard cut: rank-exactness under the filter needs the
         # full eligible score set (df-proportional, the scored_docs
@@ -392,59 +369,12 @@ def search_topk_boolean(
         ordered_terms=ordered_terms, k1=stats.k1, b=stats.b,
         avgdl=stats.avgdl, k=k_eff,
     )
-
-    if serving == "driver" and index.dl_array() is None:
-        raise ValueError(
-            f"index has {stats.n_docs} docs: too large for driver "
-            "serving; use serving='spark' (or 'auto')"
-        )
-    if serving == "driver" or (
-        serving == "auto"
-        and index.dl_array() is not None
-        and index.lexicon_map() is not None
-    ):
-        return _driver_search(
-            index, ordered_terms, buckets, hit_hashes, k_eff, "or",
-            "dense", pairs_fn=pairs_fn, exclude=tomb, final_k=k,
-            stats=stats,
-        )
-
-    blocks = index.postings.where(
-        F.col("bucket").isin(buckets) & F.col("term_hash").isin(hit_hashes)
-    )
-    n_parts = max(1, min(stats.num_shards,
-                         spark.sparkContext.defaultParallelism))
-    dl_bc = index.dl_broadcast()
-    if dl_bc is not None:
-        scorer = _make_shard_scorer(ordered_terms, stats, k_eff, "dense",
-                                    dl_bc=dl_bc, pairs_fn=pairs_fn)
-        per_shard = (
-            blocks.repartition(n_parts, "shard")
-            .groupBy("shard")
-            .applyInPandas(scorer, schema=TOPK_SCHEMA)
-        )
-    else:
-        shards = blocks.select("shard").distinct()
-        dls = index.doc_stats.join(F.broadcast(shards), "shard", "left_semi")
-        scorer = _make_shard_scorer(ordered_terms, stats, k_eff, "dense",
-                                    pairs_fn=pairs_fn)
-        per_shard = (
-            blocks.repartition(n_parts, "shard")
-            .groupBy("shard")
-            .cogroup(dls.repartition(n_parts, "shard").groupBy("shard"))
-            .applyInPandas(scorer, schema=TOPK_SCHEMA)
-        )
-    if tomb is not None:
-        per_shard = per_shard.join(
-            F.broadcast(index.tombstones), "doc_id", "left_anti"
-        )
-    if doc_filter is not None:
-        per_shard = per_shard.join(
-            doc_filter.select("doc_id").distinct(), "doc_id", "left_semi"
-        )
-    return per_shard.orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    ).limit(k)
+    # the postings scan needs every PRESENT leaf (negative terms too:
+    # their presence vectors are what NOT complements)
+    read = [(int(m["hash"]), t, float(m["idf"]))
+            for t, m in sorted(meta.items())]
+    return _execute(index, stats, [_Query(None, read, pairs_fn)], k, "or",
+                    serving, doc_filter)
 
 
 def boolean_topk_dataframe(

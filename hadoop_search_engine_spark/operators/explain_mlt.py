@@ -135,17 +135,17 @@ def explain_score(
     explains to zero rows, consistent with search. Driver-side: a
     lexicon probe plus ONE bucket-pruned postings read of the doc's
     shard — no corpus scan, no Spark job on the hot path."""
-    resolved = _resolve_query(index, query_text, synonyms, "or", "dense",
+    stats, q = _resolve_query(index, query_text, synonyms, "or", "dense",
                               k1, b)
     spark = index.spark
-    if resolved is None:
+    if q is None:
         return _empty_df(spark, EXPLAIN_SCHEMA)
     tomb = index.tombstone_array() if index.tombstone_count() else None
     if tomb is not None and np.any(tomb == int(doc_id)):
         return _empty_df(spark, EXPLAIN_SCHEMA)
     term_fns = _similarity_term_fns(index, similarity, query_text, synonyms,
                                     k1=k1, b=b)
-    stats, ordered_terms, _algorithm = resolved
+    ordered_terms = q.terms
     meta = _lookup_terms(index, [t for _h, t, _i in ordered_terms])
     doc_id = int(doc_id)
     span = stats.shard_span

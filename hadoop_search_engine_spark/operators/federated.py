@@ -10,15 +10,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .query_exec import (
-    DL_BROADCAST_MAX_DOCS,
     SEGMENT_BATCH_TOPK_SCHEMA,
     SEGMENT_TOPK_SCHEMA,
-    _driver_search_pairs,
+    _Query,
+    _driver_score,
     _empty_df,
-    _execute_topk,
-    _execute_topk_batch,
+    _execute,
     _lookup_terms,
-    _tombstone_gate,
     parse_query,
 )
 
@@ -116,8 +114,8 @@ def search_topk_segments_rows(
 ) -> list[tuple[int, int, float]]:
     """:func:`search_topk_segments` as the serving fast path: plain
     ``[(segment, doc_id, score)]`` triples, every segment served on
-    the driver (:func:`_driver_search_pairs` — postings LRU, no Spark
-    job, no DataFrame wrap), the cross-segment merge a k·segments-row
+    the driver (:func:`~.query_exec._driver_score` — postings LRU, no
+    Spark job, no DataFrame wrap), the cross-segment merge a k·segments-row
     Python sort with the same ordering (score desc, segment asc,
     doc_id asc). Rank- and score-identical to the DataFrame path by
     test; same per-segment gates as :func:`search_topk_rows`."""
@@ -125,24 +123,12 @@ def search_topk_segments_rows(
     for i, ix, stats_g, ordered, algo in _federated_plan(
         indexes, query_text, synonyms, mode, algorithm
     ):
-        if ix.dl_array() is None:
-            raise ValueError(
-                f"segment {i} has {ix.stats.n_docs} docs "
-                f"(> {DL_BROADCAST_MAX_DOCS}): too large for driver "
-                "serving; use search_topk_segments(serving='spark')"
-            )
-        tomb, _ = _tombstone_gate(
-            ix, f"search_topk_segments(serving='spark') for segment {i}"
-        )
-        hit_hashes = sorted(h for h, _, _ in ordered)
-        rows.extend(
-            (i, d, s)
-            for d, s in _driver_search_pairs(
-                ix, ordered, hit_hashes, k, mode, algo,
-                exclude=tomb, stats=stats_g,
-                after=_segment_after(after, i),
-            )
-        )
+        q = _Query(None, ordered, algo, after=_segment_after(after, i))
+        pairs = _driver_score(
+            ix, stats_g, [q], k, mode,
+            f"search_topk_segments(serving='spark') for segment {i}",
+        )[None]
+        rows.extend((i, d, s) for d, s in pairs)
     rows.sort(key=lambda r: (-r[2], r[0], r[1]))
     return rows[:k]
 
@@ -185,8 +171,8 @@ def search_topk_segments(
     plan = _federated_plan(indexes, query_text, synonyms, mode, algorithm)
     parts = []
     for i, ix, stats_g, ordered, algo in plan:
-        res = _execute_topk(ix, stats_g, ordered, k, mode, serving, algo,
-                            None, after=_segment_after(after, i))
+        q = _Query(None, ordered, algo, after=_segment_after(after, i))
+        res = _execute(ix, stats_g, [q], k, mode, serving)
         parts.append(
             res.select(
                 F.lit(i).cast("int").alias("segment"), "doc_id", "score"
@@ -269,14 +255,14 @@ def search_topk_segments_batch(
                 # a doc lives wholly in one segment: a segment missing
                 # any query term can't host a conjunctive match
                 continue
-            per_q.append((
+            per_q.append(_Query(
                 qid,
                 [(int(m[t]["hash"]), t, float(idf_g[t])) for t in seg_terms],
             ))
         if not per_q:
             continue
         stats_g = dataclasses.replace(ix.stats, avgdl=avgdl_g)
-        res = _execute_topk_batch(ix, stats_g, per_q, k, mode, serving)
+        res = _execute(ix, stats_g, per_q, k, mode, serving, batch=True)
         parts.append(res.select(
             "query_id", F.lit(i).cast("int").alias("segment"),
             "doc_id", "score",

@@ -875,23 +875,22 @@ def _try_impact_rows(
     read."""
     from .query_exec import TOMBSTONE_OVERFETCH_MAX
 
-    resolved = _resolve_query(index, query_text, synonyms, "or", "dense",
+    stats, q = _resolve_query(index, query_text, synonyms, "or", "dense",
                               k1, b)
-    if resolved is None:
+    if q is None:
         # no known term: the exact empty page, like dense — served
         # here, not by a fallback
         if info is not None:
             info.update(used=True, mode="full", seen=0, candidates=0,
                         probes=0, expanded=0)
         return []
-    stats, ordered_terms, _ = resolved
     imp = ImpactLists.load(index)
     if imp is None:
         return None
     if index.tombstone_count() > TOMBSTONE_OVERFETCH_MAX:
         return None
     tomb = index.tombstone_array()
-    return _impact_pairs(index, ordered_terms, k, stats, imp,
+    return _impact_pairs(index, q.terms, k, stats, imp,
                          exclude=tomb, info=info)
 
 
@@ -912,7 +911,13 @@ def impact_topk_batch_rows(
     :func:`search_topk_rows` on either branch; queries with no hits
     map to no key (the batch-rows contract). ``info`` (optional)
     reports ``certified`` / ``dense_batch`` counts. Same driver
-    gates as the dense batch for the fallback portion."""
+    gates as the dense batch for the fallback portion.
+
+    Past the driver norms limit there is no dense fallback: if any
+    query fails certification, :class:`ImpactRefused` names the
+    refused query_ids (``.refused``) and carries the certified pages
+    (``.certified``, ``{query_id: pairs}``), so neither is lost and a
+    refused query never reads as a no-hit one."""
     from .query_exec import search_topk_batch_rows
 
     out: dict[str, list[tuple[int, float]]] = {}
@@ -926,11 +931,21 @@ def impact_topk_batch_rows(
         certified += 1
         if got:
             out[qid] = got
-    if miss:
-        out.update(search_topk_batch_rows(index, miss, k, synonyms))
     if info is not None:
         info.clear()
         info.update(certified=certified, dense_batch=len(miss))
+    if miss and index.dl_array() is None:
+        err = ImpactRefused(
+            f"index has {index.stats.n_docs} docs (> driver norms limit) "
+            f"and the champion-list proof did not certify query_ids "
+            f"{list(miss)}: use search_topk_batch(serving='spark') for "
+            "them, or rebuild the sidecar with a larger m"
+        )
+        err.refused = list(miss)
+        err.certified = out
+        raise err
+    if miss:
+        out.update(search_topk_batch_rows(index, miss, k, synonyms))
     return out
 
 

@@ -6,7 +6,6 @@ remain importable from ``operators.query_exec``."""
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 import numpy as np
 import pandas as pd
@@ -14,15 +13,14 @@ import pandas as pd
 from ..functions import codec
 from ..functions.tokenizer import tokenize
 from .query_exec import (
-    DL_BROADCAST_MAX_DOCS,
-    TOMBSTONE_OVERFETCH_MAX,
     TOPK_SCHEMA,
     Index,
+    _Query,
     _check_after,
-    _driver_search,
     _empty_df,
+    _execute,
     _lookup_terms,
-    _make_shard_scorer,
+    _overfetch_k,
     _partial,
     _topk_pairs,
 )
@@ -313,24 +311,7 @@ def phrase_search(
         ]
         if not exp_terms:
             return _empty_df(spark, TOPK_SCHEMA)
-        meta = {**meta, **emeta}
-    buckets = sorted({m["bucket"] for m in meta.values()})
-    hit_hashes = sorted(int(m["hash"]) for m in meta.values())
-
-    # tombstones: over-retrieve + post-filter (phrase has no cogroup
-    # eligibility-page variant, so very large tombstone sets require a
-    # vacuum first)
-    tomb = None
-    tomb_n = index.tombstone_count()
-    if tomb_n:
-        if tomb_n > TOMBSTONE_OVERFETCH_MAX:
-            raise ValueError(
-                f"{tomb_n} tombstones exceed the phrase-search "
-                f"over-retrieve limit ({TOMBSTONE_OVERFETCH_MAX}); run "
-                "vacuum_index first"
-            )
-        tomb = index.tombstone_array()
-    k_eff = k + (int(tomb.size) if tomb is not None else 0)
+    k_eff = _overfetch_k(index, k, "phrase-search")
 
     import functools
 
@@ -340,6 +321,8 @@ def phrase_search(
         window=_window, after=_check_after(after), exp_terms=exp_terms,
         first_end=first_end,
     )
+    # the scorer reads the postings of every term, expansions included
+    read = ordered_terms + (exp_terms or [])
 
     # auto picks driver serving whenever the index is small enough for
     # the driver-pinned norms/lexicon — measured faster than the
@@ -347,51 +330,8 @@ def phrase_search(
     # path ships the probed position blobs through an extra shuffle +
     # Arrow transfer; at >20M docs there is no choice and it shards the
     # decode in parallel).
-    if serving == "driver" and index.dl_array() is None:
-        raise ValueError(
-            f"index has {stats.n_docs} docs (> {DL_BROADCAST_MAX_DOCS}): too "
-            "large for driver serving; use serving='spark' (or 'auto')"
-        )
-    if serving == "driver" or (
-        serving == "auto"
-        and index.dl_array() is not None
-        and index.lexicon_map() is not None
-    ):
-        return _driver_search(
-            index, ordered_terms, buckets, hit_hashes, k_eff, "and", "dense",
-            pairs_fn=pairs_fn, exclude=tomb, final_k=k,
-        )
-
-    blocks = index.postings.where(
-        F.col("bucket").isin(buckets) & F.col("term_hash").isin(hit_hashes)
-    )
-    n_parts = max(1, min(stats.num_shards,
-                         spark.sparkContext.defaultParallelism))
-    dl_bc = index.dl_broadcast()
-    if dl_bc is not None:
-        scorer = _make_shard_scorer(ordered_terms, stats, k_eff, "dense",
-                                    dl_bc=dl_bc, pairs_fn=pairs_fn)
-        per_shard = (
-            blocks.repartition(n_parts, "shard")
-            .groupBy("shard")
-            .applyInPandas(scorer, schema=TOPK_SCHEMA)
-        )
-    else:
-        shards = blocks.select("shard").distinct()
-        dls = index.doc_stats.join(F.broadcast(shards), "shard", "left_semi")
-        scorer = _make_shard_scorer(ordered_terms, stats, k_eff, "dense",
-                                    pairs_fn=pairs_fn)
-        per_shard = (
-            blocks.repartition(n_parts, "shard")
-            .groupBy("shard")
-            .cogroup(dls.repartition(n_parts, "shard").groupBy("shard"))
-            .applyInPandas(scorer, schema=TOPK_SCHEMA)
-        )
-    if tomb is not None:
-        per_shard = per_shard.join(
-            F.broadcast(index.tombstones), "doc_id", "left_anti"
-        )
-    return per_shard.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+    return _execute(index, stats, [_Query(None, read, pairs_fn)], k, "and",
+                    serving)
 
 def near_search(
     index: Index,

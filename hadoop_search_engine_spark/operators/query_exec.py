@@ -1,36 +1,49 @@
 """Query execution: BM25 top-k over the compressed index.
 
-Replaces the reference's serving path — an in-memory JS hash map
-probed per term with OR-union first-seen dedup and no scoring
-(/root/reference/server/src/services/search.service.js:58-90) — with
-three executors over the sharded block index:
+Replaces the reference server's serving path — an in-memory JS hash
+map probed per term with OR-union first-seen dedup and no scoring
+(server/src/services/search.service.js:58-90) — with ONE scorer core
+over the sharded block index, whatever the call:
 
-  * :func:`search_topk` (``algorithm="wand"``): block-max WAND. Query
-    terms are tokenized/rewritten driver-side (they are query metadata,
-    not data), looked up in the lexicon with bucket partition pruning,
-    then the pruned posting blocks are **cogrouped by shard with the
-    doc-length table** (``applyInPandas`` over a cogroup — each task
-    scores one contiguous doc_id range with a dense local dl array, no
-    per-doc join). Each shard emits its local top-k; the global merge
-    is a k*num_shards-row sort — trivially small. Driver serving
-    additionally pins recently-probed posting rows in a per-Index LRU
-    (:meth:`Index.postings_rows`) so Zipfian-hot terms skip parquet.
-  * ``algorithm="dense"``: same plumbing, but the per-shard scorer is
-    a fully vectorized dense accumulator (decode all blocks, one
-    ``np.add.at`` per term in ascending term order). No pruning, pure
-    NumPy throughput; rank- and score-identical to WAND by test.
-  * :func:`bm25_topk_dataframe`: exhaustive pure-DataFrame scorer over
-    the raw documents table (no index) — the M1 baseline and the
-    oracle-comparable path.
+  * front end (:func:`_resolve_batch`): every query of a call is
+    tokenized/rewritten driver-side (queries are metadata, not data),
+    one lexicon probe (driver-cached map, or a bucket-pruned scan)
+    resolves the union of their terms, and each query gets its
+    ascending-term ``(hash, term, idf)`` list and algorithm — block-max
+    WAND for a conjunctive query with a selective term, the dense
+    accumulator otherwise. A single query is a batch of one
+    (:func:`_resolve_query`).
+  * per-shard scorer (:func:`_score_shard`): every query of the call
+    over one shard's posting blocks — dense (batch-decode every block,
+    vectorized accumulate; the dense queries of a call share each
+    term's decode), WAND (segment-vectorized, theta-pruned) or a
+    ``pairs_fn`` (phrase, boolean) — with the ``after`` cursor and the
+    tombstone mask applied before top-k selection.
+  * driver loop (:func:`_driver_score`): bucket-pruned pyarrow reads
+    of the probed postings through the per-Index hot LRU
+    (:meth:`Index.postings_rows_by_term`), then the scorer once per
+    shard — no Spark job. It serves the ``*_rows`` functions and every
+    ``serving="driver"`` (or small-index ``"auto"``) call.
+  * executor plan (:func:`_execute`): one pruned postings scan grouped
+    by shard into the same scorer (``applyInPandas``), doc lengths from
+    a session broadcast — or, past ``DL_BROADCAST_MAX_DOCS`` or under a
+    ``doc_filter`` / large tombstone set, each shard's doc_stats page
+    cogrouped in as the eligibility page. Each shard emits its local
+    top-k; the global merge is a k·num_shards-row sort (a per-query
+    window for a batch).
 
-Plus :func:`or_union_search` — the reference's exact OR-union
-first-seen semantics (search.service.js:59-83) as a compatibility mode.
+Plus :func:`bm25_topk_dataframe`, the exhaustive pure-DataFrame scorer
+over the raw documents table (no index) — the M1 baseline and the
+oracle-comparable path — and :func:`or_union_search`, the reference's
+exact OR-union first-seen semantics (search.service.js:59-83) as a
+compatibility mode.
 
 Score determinism: per-(term, doc) partials are float64 and are summed
 in ascending term order in every implementation (WAND, dense,
 DataFrame via deterministic formula, NumPy oracle), ties broken by
 doc_id ascending — so top-k is *score*-identical, not just
-rank-identical (SURVEY.md §7 hard part #2/#3).
+rank-identical (SURVEY.md §7 hard part #2/#3), and a batch's results
+are bit-identical to its queries' single calls.
 """
 
 from __future__ import annotations
@@ -38,6 +51,7 @@ from __future__ import annotations
 import os
 import re
 from dataclasses import dataclass
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -123,8 +137,9 @@ LEXICON_CACHE_MAX_TERMS = 2_000_000
 # Beyond it the query falls back to the cogroup scorer with the
 # tombstones anti-joined out of the doc-length page (the doc_filter
 # mechanism); vacuum_index regularly to stay under the threshold.
-# Phrase and boolean queries keep over-retrieving k + |tombstones|
-# and post-filtering up to the same limit.
+# Phrase and boolean queries (a pairs_fn) over-retrieve k +
+# |tombstones| per shard instead, filtered inside the same shard
+# scorer, up to the same limit.
 TOMBSTONE_OVERFETCH_MAX = 10_000
 
 # Driver-serving hot-postings cache budget (MB; env
@@ -248,6 +263,17 @@ def _postings_entries(pdf: pd.DataFrame, hashes: list[int]) -> dict[int, tuple]:
                   + int(blob[rows].sum()))
         out[int(th[lo])] = (frame, nbytes, blocks)
     return out
+
+
+def _concat_rows(frames) -> pd.DataFrame:
+    """Per-term posting-row frames as one frame (empty ones dropped)."""
+    frames = list(frames)
+    nonempty = [f for f in frames if len(f)]
+    if not nonempty:
+        return frames[0] if frames else pd.DataFrame()
+    if len(nonempty) == 1:
+        return nonempty[0]
+    return pd.concat(nonempty, ignore_index=True)
 
 
 @dataclass
@@ -493,13 +519,7 @@ class Index:
         """:meth:`postings_rows_by_term` concatenated back into one
         frame — for the WAND / phrase / boolean paths that group by
         shard across terms."""
-        frames = list(self.postings_rows_by_term(hit_hashes).values())
-        nonempty = [f for f in frames if len(f)]
-        if not nonempty:
-            return frames[0] if frames else pd.DataFrame()
-        if len(nonempty) == 1:
-            return nonempty[0]
-        return pd.concat(nonempty, ignore_index=True)
+        return _concat_rows(self.postings_rows_by_term(hit_hashes).values())
 
     def warm(self, top_terms: int = 0) -> dict:
         """Serving-node startup warm-up — the analog of the reference
@@ -655,6 +675,22 @@ def _tombstone_gate(index: Index, driver_alt: str | None = None):
             )
         return None, True
     return index.tombstone_array(), False
+
+
+def _overfetch_k(index: Index, k: int, what: str) -> int:
+    """Per-shard k of a ``pairs_fn`` scorer (phrase, boolean): it
+    over-retrieves ``k + |tombstones|`` and :func:`_score_shard`
+    filters the tombstoned pairs out. It has no eligibility-page
+    variant, so a tombstone set past ``TOMBSTONE_OVERFETCH_MAX``
+    refuses."""
+    tomb, too_many = _tombstone_gate(index)
+    if too_many:
+        raise ValueError(
+            f"{index.tombstone_count()} tombstones exceed the {what} "
+            f"over-retrieve limit ({TOMBSTONE_OVERFETCH_MAX}); run "
+            "vacuum_index first"
+        )
+    return k + (0 if tomb is None else int(tomb.size))
 
 
 def parse_query(
@@ -926,16 +962,14 @@ def search_topk(
                     eligible, "doc_id", "left_semi"
                 )
             )
-    resolved = _resolve_query(index, query_text, synonyms, mode, algorithm,
+    stats, q = _resolve_query(index, query_text, synonyms, mode, algorithm,
                               k1, b)
-    if resolved is None:
+    if q is None:
         return _empty_df(index.spark, TOPK_SCHEMA)
-    stats, ordered_terms, algorithm = resolved
     term_fns = _similarity_term_fns(index, similarity, query_text, synonyms,
                                     k1=k1, b=b)
-    return _execute_topk(index, stats, ordered_terms, k, mode,
-                         serving, algorithm, doc_filter, after=after,
-                         term_fns=term_fns)
+    q = q._replace(after=after, term_fns=term_fns)
+    return _execute(index, stats, [q], k, mode, serving, doc_filter)
 
 
 def _similarity_term_fns(
@@ -1004,19 +1038,13 @@ def scored_docs(
     ``doc_filter``, per-query ``similarity``, and ``k1``/``b``
     overrides compose as in :func:`search_topk`. ``boost`` scales
     every score (a field weight, folded driver-side)."""
-    resolved = _resolve_query(index, query_text, synonyms, mode, "dense",
-                              k1, b)
-    if resolved is None:
+    stats, q = _scored_docs_query(index, query_text, synonyms, mode,
+                                  similarity, boost, k1, b)
+    if q is None:
         return _empty_df(index.spark, TOPK_SCHEMA)
-    stats, ordered_terms, _ = resolved
-    if boost != 1.0:
-        ordered_terms = [(h, t, w * boost) for h, t, w in ordered_terms]
-    term_fns = _similarity_term_fns(index, similarity, query_text, synonyms,
-                                    k1=k1, b=b, boost=boost)
     k_all = stats.num_shards * stats.shard_span
-    return _execute_topk(index, stats, ordered_terms, k_all, mode, "spark",
-                         "dense", doc_filter, merge_topk=False,
-                         term_fns=term_fns)
+    return _execute(index, stats, [q], k_all, mode, "spark", doc_filter,
+                    merge=False)
 
 
 def scored_docs_pairs(
@@ -1031,27 +1059,28 @@ def scored_docs_pairs(
     plain ``[(doc_id, score)]`` for every matched doc, (score desc,
     doc_id asc)-ordered. Same driver-serving constraints as
     :func:`search_topk_rows`."""
-    resolved = _resolve_query(index, query_text, synonyms, mode, "dense",
-                              None, None)
-    if resolved is None:
+    stats, q = _scored_docs_query(index, query_text, synonyms, mode,
+                                  similarity, boost)
+    if q is None:
         return []
-    stats, ordered_terms, _ = resolved
-    if boost != 1.0:
-        ordered_terms = [(h, t, w * boost) for h, t, w in ordered_terms]
-    if index.dl_array() is None:
-        raise ValueError(
-            f"index has {stats.n_docs} docs (> {DL_BROADCAST_MAX_DOCS}): too "
-            "large for driver serving; use scored_docs"
-        )
-    term_fns = _similarity_term_fns(index, similarity, query_text, synonyms,
-                                    boost=boost)
-    tomb, _ = _tombstone_gate(index, "scored_docs")
-    hit_hashes = sorted(h for h, _, _ in ordered_terms)
     k_all = stats.num_shards * stats.shard_span
-    return _driver_search_pairs(
-        index, ordered_terms, hit_hashes, k_all, mode, "dense",
-        exclude=tomb, stats=stats, term_fns=term_fns,
-    )
+    return _driver_score(index, stats, [q], k_all, mode, "scored_docs")[None]
+
+
+def _scored_docs_query(index, query_text, synonyms, mode, similarity, boost,
+                       k1=None, b=None):
+    """The one dense query of :func:`scored_docs` /
+    :func:`scored_docs_pairs`, ``boost`` folded into its weights:
+    ``(stats, query)``, query None when nothing can match."""
+    stats, q = _resolve_query(index, query_text, synonyms, mode, "dense",
+                              k1, b)
+    if q is None:
+        return stats, None
+    if boost != 1.0:
+        q = q._replace(terms=[(h, t, w * boost) for h, t, w in q.terms])
+    term_fns = _similarity_term_fns(index, similarity, query_text, synonyms,
+                                    k1=k1, b=b, boost=boost)
+    return stats, q._replace(term_fns=term_fns)
 
 
 def _check_after(after) -> tuple[int, float] | None:
@@ -1065,19 +1094,38 @@ def _check_after(after) -> tuple[int, float] | None:
     return (int(after[0]), float(after[1]))
 
 
-def _resolve_query(
+class _Query(NamedTuple):
+    """One query of a scorer call. ``terms`` are its ``(term_hash,
+    term, weight)`` triples in ascending term order (weight = idf, any
+    boost folded in). ``algorithm`` is ``"dense"``, ``"wand"``, or a
+    ``pairs_fn(left, dl, base) -> [(doc_id, score)]`` over one shard's
+    posting rows (phrase, boolean; their ``terms`` then list every
+    term whose postings the function reads). ``after`` is the query's
+    cursor, ``term_fns`` its similarity table
+    (:func:`_similarity_term_fns`)."""
+
+    qid: object
+    terms: list
+    algorithm: object = "dense"
+    after: tuple | None = None
+    term_fns: dict | None = None
+
+
+def _resolve_batch(
     index: Index,
-    query_text: str,
+    queries: dict,
     synonyms: dict[str, str] | None,
     mode: str,
-    algorithm: str,
     k1: float | None,
     b: float | None,
-) -> tuple[IndexStats, list[tuple[int, str, float]], str] | None:
-    """Shared query front end: validate, apply (k1, b) overrides,
-    tokenize/rewrite, probe the lexicon, pick the algorithm. Returns
-    None when the query can produce no hits (no known term; conjunctive
-    query with an absent term)."""
+    algorithm: str = "dense",
+) -> tuple[IndexStats, list[_Query]]:
+    """The query front end: validate, apply (k1, b) overrides,
+    tokenize/rewrite every query, ONE lexicon probe for the union of
+    their terms, and per query its term list and algorithm —
+    ``"auto"`` picks by measured crossover (see :func:`search_topk`).
+    Queries that can produce no hits (no known term; a conjunctive
+    query with an absent term) contribute no entry."""
     if mode not in ("or", "and"):
         raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
     if algorithm not in ("auto", "wand", "dense"):
@@ -1091,33 +1139,51 @@ def _resolve_query(
             k1=stats.k1 if k1 is None else float(k1),
             b=stats.b if b is None else float(b),
         )
-    terms, boosts = parse_query_boosted(query_text, synonyms,
-                                        index.token_fn())
-    meta = _lookup_terms(index, terms)
-    if not meta:
-        return None
-    if mode == "and" and len(meta) < len(set(terms)):
-        # some query term has no postings anywhere -> no conjunctive hit
-        return None
-    if algorithm == "auto":
-        min_df = min(m["df"] for m in meta.values())
-        algorithm = "wand" if (mode == "and" and min_df <= 20_000) else "dense"
+    tfn = index.token_fn()
+    parsed = {
+        qid: parse_query_boosted(text, synonyms, tfn)
+        for qid, text in queries.items()
+    }
+    meta = _lookup_terms(
+        index, sorted({t for ts, _ in parsed.values() for t in ts})
+    )
+    out: list[_Query] = []
+    for qid, (ts, boosts) in parsed.items():
+        qmeta = {t: meta[t] for t in ts if t in meta}
+        if not qmeta or (mode == "and" and len(qmeta) < len(set(ts))):
+            continue  # no known term, or a conjunct absent everywhere
+        algo = algorithm
+        if algo == "auto":
+            min_df = min(m["df"] for m in qmeta.values())
+            algo = "wand" if (mode == "and" and min_df <= 20_000) else "dense"
+        # (hash, term, idf) in ascending TERM-STRING order: every scorer
+        # sums per-doc partials in this order, so float results are
+        # bit-identical to the oracle's ascending-term summation. A query
+        # boost folds into the term's idf — BM25 contributions are linear
+        # in idf, so every scorer (dense accumulate, WAND incl. its block
+        # upper bounds, driver rows) stays exact with no scorer changes.
+        terms = [
+            (int(m["hash"]), t, float(m["idf"]) * boosts.get(t, 1.0))
+            for t, m in sorted(qmeta.items())
+        ]
+        out.append(_Query(qid, terms, algo))
+    return stats, out
 
-    # (hash, term, idf) in ascending TERM-STRING order: every scorer
-    # sums per-doc partials in this order, so float results are
-    # bit-identical to the oracle's ascending-term summation. A query
-    # boost folds into the term's idf — BM25 contributions are linear
-    # in idf, so every scorer (dense accumulate, WAND incl. its block
-    # upper bounds, driver rows) stays exact with no scorer changes.
-    ordered_terms = [
-        (
-            int(m["hash"]),
-            t,
-            float(m["idf"]) * boosts[t] if t in boosts else float(m["idf"]),
-        )
-        for t, m in sorted(meta.items())
-    ]
-    return stats, ordered_terms, algorithm
+
+def _resolve_query(
+    index: Index,
+    query_text: str,
+    synonyms: dict[str, str] | None,
+    mode: str,
+    algorithm: str,
+    k1: float | None,
+    b: float | None,
+) -> tuple[IndexStats, _Query | None]:
+    """:func:`_resolve_batch` for a batch of one: ``(stats, query)``,
+    the query None when it can produce no hits."""
+    stats, qs = _resolve_batch(index, {None: query_text}, synonyms, mode,
+                               k1, b, algorithm)
+    return stats, (qs[0] if qs else None)
 
 
 def search_topk_rows(
@@ -1148,170 +1214,22 @@ def search_topk_rows(
     inside the shard scorers, which select exactly k. No
     ``doc_filter`` — filtered search is cogroup-only."""
     after = _check_after(after)
-    resolved = _resolve_query(index, query_text, synonyms, mode, algorithm,
+    stats, q = _resolve_query(index, query_text, synonyms, mode, algorithm,
                               k1, b)
-    if resolved is None:
+    if q is None:
         return []
-    stats, ordered_terms, algorithm = resolved
-    if index.dl_array() is None:
-        raise ValueError(
-            f"index has {stats.n_docs} docs (> {DL_BROADCAST_MAX_DOCS}): too "
-            "large for driver serving; use search_topk(serving='spark')"
-        )
-    tomb, _ = _tombstone_gate(index, "search_topk(serving='spark')")
-    hit_hashes = sorted(h for h, _, _ in ordered_terms)
     term_fns = _similarity_term_fns(index, similarity, query_text, synonyms,
                                     k1=k1, b=b)
-    return _driver_search_pairs(
-        index, ordered_terms, hit_hashes, k, mode, algorithm,
-        exclude=tomb, stats=stats, after=after, term_fns=term_fns,
-    )
-
-
-def _execute_topk(
-    index: Index,
-    stats: IndexStats,
-    ordered_terms: list[tuple[int, str, float]],
-    k: int,
-    mode: str,
-    serving: str,
-    algorithm: str,
-    doc_filter: DataFrame | None,
-    after: tuple[int, float] | None = None,
-    merge_topk: bool = True,
-    term_fns: dict | None = None,
-) -> DataFrame:
-    """Scoring tail shared by :func:`search_topk` and
-    :func:`search_topk_segments`. ``ordered_terms`` carry the idf
-    actually used (per-index or federated-global); ``stats`` carries
-    the avgdl actually used — the segmented path passes overrides."""
-    spark = index.spark
-    # bucket = pmod(term_hash, n_buckets): Python % matches np.mod /
-    # Spark pmod sign behavior for a positive modulus
-    buckets = sorted({h % stats.n_buckets for h, _, _ in ordered_terms})
-    hit_hashes = sorted(h for h, _, _ in ordered_terms)
-    blocks = index.postings.where(
-        F.col("bucket").isin(buckets) & F.col("term_hash").isin(hit_hashes)
-    )
-
-    # Tombstoned (deleted-but-not-vacuumed) docs never appear in
-    # results. A small set is masked inside every shard scorer (driver
-    # or executor: the array rides in the scorer closure); a large set
-    # folds into the cogroup scorer's eligibility page.
-    tomb, too_many = _tombstone_gate(index)
-    exclude_df = index.tombstones if too_many else None
-
-    if doc_filter is not None or exclude_df is not None:
-        if serving == "driver":
-            raise ValueError(
-                "doc_filter (or a tombstone set past "
-                f"{TOMBSTONE_OVERFETCH_MAX}) needs the distributed "
-                "cogroup scorer; use serving='spark' (or 'auto'), or "
-                "vacuum_index to shrink the tombstones"
-            )
-        # Filtered queries always score dense: eligibility can hollow
-        # out any segment, so block-max bounds (which ignore the mask)
-        # stop pruning anything while still costing the visit order.
-        n_parts = max(1, min(stats.num_shards,
-                             spark.sparkContext.defaultParallelism))
-        shards = blocks.select("shard").distinct()
-        dls = index.doc_stats.join(F.broadcast(shards), "shard", "left_semi")
-        if doc_filter is not None:
-            dls = dls.join(doc_filter.select("doc_id"), "doc_id", "left_semi")
-        if exclude_df is not None:
-            dls = dls.join(
-                exclude_df.select("doc_id"), "doc_id", "left_anti"
-            )
-        scorer = _make_shard_scorer(ordered_terms, stats, k, "dense",
-                                    mode=mode, require_dl=True, after=after,
-                                    term_fns=term_fns, tomb=tomb)
-        per_shard = (
-            blocks.repartition(n_parts, "shard")
-            .groupBy("shard")
-            .cogroup(dls.repartition(n_parts, "shard").groupBy("shard"))
-            .applyInPandas(scorer, schema=TOPK_SCHEMA)
-        )
-        if not merge_topk:
-            return per_shard
-        return per_shard.orderBy(
-            F.col("score").desc(), F.col("doc_id").asc()
-        ).limit(k)
-
-    if serving == "driver" and index.dl_array() is None:
-        raise ValueError(
-            f"index has {stats.n_docs} docs (> {DL_BROADCAST_MAX_DOCS}): too "
-            "large for driver serving; use serving='spark' (or 'auto')"
-        )
-    if serving == "driver" or (
-        serving == "auto"
-        and index.dl_array() is not None
-        and index.lexicon_map() is not None
-    ):
-        return _driver_search(
-            index, ordered_terms, buckets, hit_hashes, k, mode,
-            algorithm, exclude=tomb, stats=stats, after=after,
-            term_fns=term_fns,
-        )
-
-    # Size the scorer shuffle to the work, not the session: the
-    # grouped-map exchange otherwise inherits spark.sql.shuffle
-    # .partitions (= cores), so a bigger cluster launches MORE empty
-    # tasks per query and p95 regresses as the cluster grows. An
-    # explicit hash repartition on the grouping key satisfies the
-    # grouped-map's required ClusteredDistribution, so no second
-    # exchange is planned; num_shards bounds real parallelism anyway.
-    n_parts = max(1, min(stats.num_shards,
-                         spark.sparkContext.defaultParallelism))
-
-    dl_bc = index.dl_broadcast()
-    if dl_bc is not None:
-        # fast path: doc lengths are a session-broadcast dense array;
-        # one job, no dl shuffle, no cogroup.
-        scorer = _make_shard_scorer(ordered_terms, stats, k, algorithm,
-                                    dl_bc=dl_bc, mode=mode, after=after,
-                                    term_fns=term_fns, tomb=tomb)
-        per_shard = (
-            blocks.repartition(n_parts, "shard")
-            .groupBy("shard")
-            .applyInPandas(scorer, schema=TOPK_SCHEMA)
-        )
-    else:
-        # scale path: each shard's dl page is cogrouped with its
-        # posting blocks — dl reads prune to the probed shards via the
-        # partitionBy("shard") layout.
-        shards = blocks.select("shard").distinct()
-        dls = index.doc_stats.join(F.broadcast(shards), "shard", "left_semi")
-        scorer = _make_shard_scorer(ordered_terms, stats, k, algorithm,
-                                    mode=mode, after=after,
-                                    term_fns=term_fns, tomb=tomb)
-        per_shard = (
-            blocks.repartition(n_parts, "shard")
-            .groupBy("shard")
-            .cogroup(dls.repartition(n_parts, "shard").groupBy("shard"))
-            .applyInPandas(scorer, schema=TOPK_SCHEMA)
-        )
-    if not merge_topk:
-        return per_shard
-    return per_shard.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+    q = q._replace(after=after, term_fns=term_fns)
+    return _driver_score(index, stats, [q], k, mode,
+                         "search_topk(serving='spark')")[None]
 
 
 SEGMENT_TOPK_SCHEMA = "segment int, doc_id long, score double"
-
-
-
-
-
-
-
-
-
-
 BATCH_TOPK_SCHEMA = "query_id string, doc_id long, score double"
 SEGMENT_BATCH_TOPK_SCHEMA = (
     "query_id string, segment int, doc_id long, score double"
 )
-
-
 
 
 def search_topk_batch(
@@ -1354,63 +1272,7 @@ def search_topk_batch(
     stats, per_q = _resolve_batch(index, queries, synonyms, mode, k1, b)
     if not per_q:
         return _empty_df(index.spark, BATCH_TOPK_SCHEMA)
-    return _execute_topk_batch(index, stats, per_q, k, mode, serving)
-
-
-def _resolve_batch(
-    index: Index,
-    queries: dict[str, str],
-    synonyms: dict[str, str] | None,
-    mode: str,
-    k1: float | None,
-    b: float | None,
-) -> tuple[IndexStats, list[tuple[str, list[tuple[int, str, float]]]]]:
-    """Shared batch front end: ONE lexicon probe for the union of all
-    queries' terms, per-query ascending-term (hash, term, idf) lists.
-    Queries that can produce no hits contribute no entry. Per-term
-    ``^boost`` syntax folds into the idf exactly as in
-    :func:`_resolve_query`, so batch results stay bit-identical to the
-    single-query paths for boosted queries too."""
-    if mode not in ("or", "and"):
-        raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
-    stats = index.stats
-    if k1 is not None or b is not None:
-        # per-call BM25 tuning, no rebuild (see search_topk)
-        import dataclasses
-
-        stats = dataclasses.replace(
-            stats,
-            k1=stats.k1 if k1 is None else float(k1),
-            b=stats.b if b is None else float(b),
-        )
-    tfn = index.token_fn()
-    parsed = {
-        qid: parse_query_boosted(text, synonyms, tfn)
-        for qid, text in queries.items()
-    }
-    all_terms = sorted({t for ts, _ in parsed.values() for t in ts})
-    meta = _lookup_terms(index, all_terms)
-    per_q: list[tuple[str, list[tuple[int, str, float]]]] = []
-    for qid, (ts, boosts) in parsed.items():
-        qmeta = {t: meta[t] for t in ts if t in meta}
-        if not qmeta:
-            continue
-        if mode == "and" and len(qmeta) < len(set(ts)):
-            continue  # a term with no postings anywhere: no conjunctive hit
-        per_q.append((
-            qid,
-            [
-                (
-                    int(m["hash"]),
-                    t,
-                    float(m["idf"]) * boosts[t]
-                    if t in boosts
-                    else float(m["idf"]),
-                )
-                for t, m in sorted(qmeta.items())
-            ],
-        ))
-    return stats, per_q
+    return _execute(index, stats, per_q, k, mode, serving, batch=True)
 
 
 def search_topk_batch_rows(
@@ -1435,422 +1297,281 @@ def search_topk_batch_rows(
     stats, per_q = _resolve_batch(index, queries, synonyms, mode, k1, b)
     if not per_q:
         return {}
-    if index.dl_array() is None:
-        raise ValueError(
-            f"index has {stats.n_docs} docs (> {DL_BROADCAST_MAX_DOCS}): too "
-            "large for driver serving; use search_topk_batch(serving='spark')"
-        )
-    tomb, _ = _tombstone_gate(index, "search_topk_batch(serving='spark')")
-    all_hashes = sorted({h for _, ot in per_q for h, _, _ in ot})
-    return _driver_search_batch_pairs(
-        index, per_q, all_hashes, k, mode, exclude=tomb, stats=stats,
-    )
+    return _driver_score(index, stats, per_q, k, mode,
+                         "search_topk_batch(serving='spark')")
 
 
-def _execute_topk_batch(
+def _execute(
     index: Index,
     stats: IndexStats,
-    per_q: list[tuple[str, list[tuple[int, str, float]]]],
+    queries: list[_Query],
     k: int,
     mode: str,
     serving: str,
+    doc_filter: DataFrame | None = None,
+    merge: bool = True,
+    batch: bool = False,
 ) -> DataFrame:
-    """Batch scoring tail shared by :func:`search_topk_batch` and
-    :func:`search_topk_segments_batch` (which passes federated-global
-    idf inside ``per_q`` and avgdl inside ``stats``)."""
-    spark = index.spark
-    all_hashes = sorted({h for _, ot in per_q for h, _, _ in ot})
-    buckets = sorted({h % stats.n_buckets for h in all_hashes})
-    blocks = index.postings.where(
-        F.col("bucket").isin(buckets) & F.col("term_hash").isin(all_hashes)
-    )
+    """The DataFrame serving tail of every scorer caller. ``queries``
+    carry the idf actually used (per-index or federated-global),
+    ``stats`` the avgdl and (k1, b) actually used. Returns ``(doc_id,
+    score)`` rows — ``(query_id, doc_id, score)`` with ``batch`` —
+    merged to each query's top k, or the unmerged per-shard rows when
+    ``merge`` is False.
 
-    tomb, too_many = _tombstone_gate(index)
-    exclude_df = index.tombstones if too_many else None
-
-    if exclude_df is None and (
-        serving == "driver"
-        or (serving == "auto"
-            and index.dl_array() is not None
-            and index.lexicon_map() is not None)
-    ):
-        if index.dl_array() is None:
-            raise ValueError(
-                f"index has {stats.n_docs} docs (> {DL_BROADCAST_MAX_DOCS}): "
-                "too large for driver serving; use serving='spark' (or 'auto')"
-            )
-        return _driver_search_batch(
-            index, per_q, buckets, all_hashes, k, mode, exclude=tomb,
-            stats=stats,
-        )
-    if serving == "driver":  # exclude_df set: needs the cogroup page
+    Serves on the driver (:func:`_driver_score`, no Spark job) when
+    ``serving="driver"``, or under ``"auto"`` when the index fits the
+    driver-pinned norms and lexicon and needs no eligibility page.
+    Otherwise ONE executor plan: a bucket- and term-pruned postings
+    scan grouped by shard into :func:`_shard_udf`, doc lengths from
+    the session broadcast, or — past ``DL_BROADCAST_MAX_DOCS``, or to
+    carry an eligibility page (``doc_filter`` semi-joined in, a
+    tombstone set past ``TOMBSTONE_OVERFETCH_MAX`` anti-joined out) —
+    from each probed shard's doc_stats page, cogrouped with its
+    blocks."""
+    if doc_filter is not None and serving == "driver":
         raise ValueError(
-            f"a tombstone set past {TOMBSTONE_OVERFETCH_MAX} needs the "
-            "distributed cogroup scorer; use serving='spark' (or "
-            "'auto'), or vacuum_index to shrink the tombstones"
+            "doc_filter needs distributed serving (the cogroup "
+            "eligibility page); use serving='spark' (or 'auto')"
         )
+    spark = index.spark
+    schema = BATCH_TOPK_SCHEMA if batch else TOPK_SCHEMA
+    tomb, too_many = _tombstone_gate(index)
+    if serving == "driver" or (
+        serving == "auto"
+        and doc_filter is None
+        and not too_many
+        and index.dl_array() is not None
+        and index.lexicon_map() is not None
+    ):
+        got = _driver_score(index, stats, queries, k, mode,
+                            "serving='spark' (or 'auto')")
+        if not any(got.values()):
+            return _empty_df(spark, schema)
+        return spark.createDataFrame(_pairs_frame(got.items(), batch))
 
+    hashes = sorted({h for q in queries for h, _, _ in q.terms})
+    # bucket = pmod(term_hash, n_buckets): Python % matches np.mod /
+    # Spark pmod sign behavior for a positive modulus
+    buckets = sorted({h % stats.n_buckets for h in hashes})
+    blocks = index.postings.where(
+        F.col("bucket").isin(buckets) & F.col("term_hash").isin(hashes)
+    )
+    # Size the scorer shuffle to the work, not the session: the
+    # grouped-map exchange otherwise inherits spark.sql.shuffle
+    # .partitions (= cores), so a bigger cluster launches MORE empty
+    # tasks per query and p95 regresses as the cluster grows. An
+    # explicit hash repartition on the grouping key satisfies the
+    # grouped-map's required ClusteredDistribution, so no second
+    # exchange is planned; num_shards bounds real parallelism anyway.
     n_parts = max(1, min(stats.num_shards,
                          spark.sparkContext.defaultParallelism))
-    dl_bc = index.dl_broadcast() if exclude_df is None else None
-    scorer = _make_batch_shard_scorer(
-        per_q, stats, k, dl_bc=dl_bc, mode=mode,
-        require_dl=exclude_df is not None, tomb=tomb,
-    )
+    grouped = blocks.repartition(n_parts, "shard").groupBy("shard")
+    paged = doc_filter is not None or too_many
+    if paged:
+        # eligibility can hollow out any segment, so block-max bounds
+        # (which ignore the page) stop pruning anything while still
+        # costing the visit order: paged queries score dense
+        queries = [q._replace(algorithm="dense") if q.algorithm == "wand"
+                   else q for q in queries]
+    dl_bc = None if paged else index.dl_broadcast()
+    scorer = _shard_udf(queries, stats, k, mode, dl_bc, tomb, paged, batch)
     if dl_bc is not None:
-        per_shard = (
-            blocks.repartition(n_parts, "shard")
-            .groupBy("shard")
-            .applyInPandas(scorer, schema=BATCH_TOPK_SCHEMA)
-        )
+        per_shard = grouped.applyInPandas(scorer, schema=schema)
     else:
         shards = blocks.select("shard").distinct()
         dls = index.doc_stats.join(F.broadcast(shards), "shard", "left_semi")
-        if exclude_df is not None:
-            dls = dls.join(exclude_df.select("doc_id"), "doc_id", "left_anti")
-        per_shard = (
-            blocks.repartition(n_parts, "shard")
-            .groupBy("shard")
-            .cogroup(dls.repartition(n_parts, "shard").groupBy("shard"))
-            .applyInPandas(scorer, schema=BATCH_TOPK_SCHEMA)
-        )
+        if doc_filter is not None:
+            dls = dls.join(doc_filter.select("doc_id"), "doc_id", "left_semi")
+        if too_many:
+            dls = dls.join(index.tombstones.select("doc_id"), "doc_id",
+                           "left_anti")
+        per_shard = grouped.cogroup(
+            dls.repartition(n_parts, "shard").groupBy("shard")
+        ).applyInPandas(scorer, schema=schema)
+    if not merge:
+        return per_shard
+    order = [F.col("score").desc(), F.col("doc_id").asc()]
+    if not batch:
+        return per_shard.orderBy(*order).limit(k)
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
+    rn = F.row_number().over(Window.partitionBy("query_id").orderBy(*order))
     return (
-        per_shard.withColumn("_rn", F.row_number().over(w))
+        per_shard.withColumn("_rn", rn)
         .where(F.col("_rn") <= k)
         .drop("_rn")
-        .orderBy("query_id", F.col("score").desc(), F.col("doc_id").asc())
+        .orderBy("query_id", *order)
     )
 
 
-def _make_batch_shard_scorer(
-    per_query_terms: list[tuple[str, list[tuple[int, str, float]]]],
-    stats: IndexStats, k: int, dl_bc=None, mode: str = "or",
-    require_dl: bool = False, tomb: np.ndarray | None = None,
-):
-    """One-shard scorer for the batch path: a per-shard decode cache
-    shares each term's block decode and idf-free partial across
-    queries; every query then runs the same dense accumulation as its
-    single-query call (see :func:`_score_dense`'s cache note), with
-    the same in-scorer tombstone mask."""
-    k1, b, avgdl = stats.k1, stats.b, stats.avgdl
-    span = stats.shard_span
-
-    _empty = pd.DataFrame({
-        "query_id": pd.Series(dtype="object"),
-        "doc_id": pd.Series(dtype="int64"),
-        "score": pd.Series(dtype="float64"),
-    })
-
-    def _score_all(left: pd.DataFrame, dl: np.ndarray, base: int) -> pd.DataFrame:
-        cache: dict = {}
-        rows_for = _block_columns(left)
-        frames = []
-        for qid, ordered in per_query_terms:
-            required = len(ordered) if mode == "and" else 0
-            pairs = _score_dense(
-                None, dl, base, ordered, k1, b, avgdl, k, required,
-                require_dl=require_dl, decode_cache=cache,
-                rows_for=rows_for, tomb=tomb,
-            )
-            if pairs:
-                f = pd.DataFrame(pairs, columns=["doc_id", "score"])
-                f.insert(0, "query_id", qid)
-                frames.append(f)
-        if not frames:
-            return _empty.copy()
-        return pd.concat(frames, ignore_index=True).astype(
-            {"doc_id": "int64", "score": "float64"}
-        )
-
-    if dl_bc is not None:
-        def scorer_bc(left: pd.DataFrame) -> pd.DataFrame:
-            if left.empty:
-                return _empty.copy()
-            base = int(left["shard"].iat[0]) * span
-            dl = dl_bc.value[base : base + span]
-            if dl.shape[0] < span:
-                dl = np.concatenate([dl, np.zeros(span - dl.shape[0])])
-            return _score_all(left, dl, base)
-
-        return scorer_bc
-
-    def scorer(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty or right.empty:
-            return _empty.copy()
-        base = int(left["shard"].iat[0]) * span
-        dl = np.zeros(span, dtype=np.float64)
-        ridx = right["doc_id"].to_numpy(np.int64) - base
-        dl[ridx] = right["doc_len"].to_numpy(np.float64)
-        return _score_all(left, dl, base)
-
-    return scorer
-
-
-def _driver_search_batch(
-    index: Index,
-    per_query_terms: list[tuple[str, list[tuple[int, str, float]]]],
-    buckets: list[int],
-    hit_hashes: list[int],
-    k: int,
-    mode: str,
-    exclude=None,
-    stats: IndexStats | None = None,
-) -> DataFrame:
-    """Batch driver serving: ONE bucket-pruned pyarrow read of the
-    union of every query's postings, then per shard a shared decode
-    cache scores all queries — no Spark job (cf. :func:`_driver_search`)."""
-    per_qid = _driver_search_batch_pairs(
-        index, per_query_terms, hit_hashes, k, mode,
-        exclude=exclude, stats=stats,
-    )
-    spark = index.spark
-    rows = [
-        (qid, d, s)
-        for qid, _ in per_query_terms
-        for d, s in per_qid.get(qid, ())
-    ]
-    if not rows:
-        return _empty_df(spark, BATCH_TOPK_SCHEMA)
+def _pairs_frame(scored, batch: bool) -> pd.DataFrame:
+    """``[(qid, [(doc_id, score)])]`` as a scorer output frame:
+    ``(query_id, doc_id, score)`` for a batch, else ``(doc_id,
+    score)``."""
+    rows = [(qid, d, s) for qid, pairs in scored for d, s in pairs]
     out = pd.DataFrame(rows, columns=["query_id", "doc_id", "score"]).astype(
         {"doc_id": "int64", "score": "float64"}
     )
-    return spark.createDataFrame(out)
+    return out if batch else out[["doc_id", "score"]]
+
+
+def _shard_udf(queries: list[_Query], stats: IndexStats, k: int, mode: str,
+               dl_bc, tomb: np.ndarray | None, require_dl: bool,
+               batch: bool):
+    """:func:`_score_shard` as the executor plan's per-shard function:
+    with ``dl_bc`` (broadcast dense doc_len array) a grouped-map
+    function over the shard's posting rows; without, a cogroup
+    function whose right side is the shard's doc_stats page —
+    ``require_dl`` makes that page the eligibility mask. ``tomb``
+    rides in the closure."""
+    span = stats.shard_span
+
+    def scorer(left: pd.DataFrame, right: pd.DataFrame | None = None):
+        scored = []
+        if len(left) and (right is None or len(right)):
+            base = int(left["shard"].iat[0]) * span
+            if right is None:
+                dl = _pad_dl(dl_bc.value[base : base + span], span)
+            else:
+                dl = np.zeros(span, dtype=np.float64)
+                dl[right["doc_id"].to_numpy(np.int64) - base] = (
+                    right["doc_len"].to_numpy(np.float64)
+                )
+            scored = _score_shard(queries, stats, k, mode, dl, base,
+                                  _block_columns(left), lambda: left,
+                                  tomb=tomb, require_dl=require_dl)
+        return _pairs_frame(scored, batch)
+
+    if dl_bc is not None:
+        # one parameter: applyInPandas reads a two-parameter function
+        # as (key, pdf)
+        return lambda left: scorer(left)
+    return scorer
+
+
+def _pad_dl(dl: np.ndarray, span: int) -> np.ndarray:
+    """One shard's slice of the dense doc_len array, zero-padded to
+    ``span`` (the last shard's slice may be short)."""
+    if dl.shape[0] < span:
+        dl = np.concatenate([dl, np.zeros(span - dl.shape[0])])
+    return dl
 
 
 def _driver_shards(index: Index, hit_hashes: list[int], span: int):
-    """Per-shard inputs of the driver dense scorers: yields ``(shard,
-    base, dl, rows_for)`` for every shard holding a probed term, where
+    """Per-shard inputs of the driver loop: yields ``(shard, base, dl,
+    rows_for, frame)`` for every shard holding a probed term, where
     ``rows_for(term_hash)`` returns the term's block columns in that
-    shard (or None). Rows come through :meth:`Index.postings_rows_by_term`
+    shard (or None) and ``frame()`` the shard's posting rows of every
+    probed term (for WAND and ``pairs_fn``; concatenated and grouped
+    on first use). Rows come through :meth:`Index.postings_rows_by_term`
     (the hot LRU) as per-term NumPy columns split by shard — no pandas
     indexing per (term, shard)."""
     frames = index.postings_rows_by_term(hit_hashes)
     blocks = {h: index._shard_blocks(h, f) for h, f in frames.items()}
     arr = index.dl_array()
+    groups: dict = {}
+
+    def frame(s):
+        if not groups:
+            rows = _concat_rows(frames.values())
+            groups.update(iter(rows.groupby("shard")))
+        return groups[s]
+
     for s in sorted({s for bs in blocks.values() for s in bs}):
         base = s * span
-        dl = arr[base : base + span]
-        if dl.shape[0] < span:
-            dl = np.concatenate([dl, np.zeros(span - dl.shape[0])])
 
         def rows_for(th, _s=s):
             bs = blocks.get(th)
             return None if bs is None else bs.get(_s)
 
-        yield s, base, dl, rows_for
+        yield (s, base, _pad_dl(arr[base : base + span], span), rows_for,
+               lambda _s=s: frame(_s))
 
 
-def _driver_search_batch_pairs(
+def _driver_score(
     index: Index,
-    per_query_terms: list[tuple[str, list[tuple[int, str, float]]]],
-    hit_hashes: list[int],
+    stats: IndexStats,
+    queries: list[_Query],
     k: int,
     mode: str,
-    exclude=None,
-    stats: IndexStats | None = None,
-) -> dict[str, list[tuple[int, float]]]:
-    """Batch driver core: shared postings read (hot LRU) + per-shard
-    shared decode, returning ``{query_id: [(doc_id, score)]}`` —
-    per-query results bit-identical to single-query serving.
-    ``exclude`` (sorted tombstoned doc_ids) is masked inside the
-    scorer."""
-    stats = stats if stats is not None else index.stats
+    alt: str,
+) -> dict:
+    """The driver loop: ONE bucket-pruned pyarrow read of the union of
+    ``queries``' postings (through the hot LRU), then
+    :func:`_score_shard` once per shard holding a probed term. Returns
+    ``{qid: [(doc_id, score)]}``, each query's top k in (score desc,
+    doc_id asc) order — no Spark job, no DataFrame. An index past the
+    driver-pinned norms, or a tombstone set past
+    ``TOMBSTONE_OVERFETCH_MAX``, raises, naming the distributed
+    alternative ``alt``."""
+    if index.dl_array() is None:
+        raise ValueError(
+            f"index has {stats.n_docs} docs (> {DL_BROADCAST_MAX_DOCS}): too "
+            f"large for driver serving; use {alt}"
+        )
+    tomb, _ = _tombstone_gate(index, alt)
+    hashes = sorted({h for q in queries for h, _, _ in q.terms})
     tfc = index._tf_cache()
-    per_qid: dict[str, list[tuple[int, float]]] = {
-        qid: [] for qid, _ in per_query_terms
-    }
-    shards = list(_driver_shards(index, hit_hashes, stats.shard_span))
-    if not shards:
-        return {}
-    for s, base, dl, rows_for in shards:
-        cache: dict = {}
-        for qid, ordered in per_query_terms:
-            required = len(ordered) if mode == "and" else 0
-            per_qid[qid].extend(
-                _score_dense(None, dl, base, ordered, stats.k1, stats.b,
-                             stats.avgdl, k, required, decode_cache=cache,
-                             tf_cache=tfc, shard=s, rows_for=rows_for,
-                             tomb=exclude)
-            )
-    for pairs in per_qid.values():
+    out: dict = {q.qid: [] for q in queries}
+    for s, base, dl, rows_for, frame in _driver_shards(index, hashes,
+                                                        stats.shard_span):
+        for qid, pairs in _score_shard(queries, stats, k, mode, dl, base,
+                                       rows_for, frame, tomb=tomb,
+                                       tf_cache=tfc, shard=s):
+            out[qid].extend(pairs)
+    for pairs in out.values():
         pairs.sort(key=lambda e: (-e[1], e[0]))
         del pairs[k:]
-    return per_qid
+    return out
 
 
-def _driver_search_pairs(
-    index: Index,
-    ordered_terms: list[tuple[int, str, float]],
-    hit_hashes: list[int],
-    k: int,
-    mode: str,
-    algorithm: str,
-    pairs_fn=None,
-    exclude=None,
-    final_k: int | None = None,
-    stats: IndexStats | None = None,
-    after: tuple[int, float] | None = None,
-    term_fns: dict | None = None,
-) -> list[tuple[int, float]]:
-    """Driver-side serving core: read ONLY the probed posting rows via
-    the per-Index pyarrow dataset / hot-postings LRU
-    (:meth:`Index.postings_rows_by_term` — bucket prunes at the file
-    listing, term_hash is a row-group min/max filter) and score with
-    the same NumPy shard scorers the executors run. Returns plain
-    ``[(doc_id, score)]`` pairs; no Spark job, no DataFrame.
-
-    ``exclude`` is the sorted tombstone array: the dense and WAND
-    scorers mask it inside each shard, so they select exactly ``k``.
-    A ``pairs_fn`` scorer (phrase / boolean) over-retrieves
-    ``k + |tombstones|`` instead; its pairs are post-filtered here and
-    cut to ``final_k``."""
-    stats = stats if stats is not None else index.stats
-    required = len(ordered_terms) if mode == "and" else 0
-    span = stats.shard_span
-    pairs: list[tuple[int, float]] = []
-    if pairs_fn is None and algorithm == "dense":
-        # dense fast path: per-term cached block columns, no pd.concat
-        # (the blob-object concat profiled at ~20% of hot query time)
-        # and no pandas indexing per (term, shard); with the
-        # decoded-(off, tf) LRU hot, the columns are not touched
-        tfc = index._tf_cache()
-        for s, base, dl, rows_for in _driver_shards(index, hit_hashes, span):
-            pairs.extend(
-                _score_dense(None, dl, base, ordered_terms, stats.k1,
-                             stats.b, stats.avgdl, k, required,
-                             tf_cache=tfc, shard=s, rows_for=rows_for,
-                             after=after, term_fns=term_fns, tomb=exclude)
-            )
-    else:
-        pdf = index.postings_rows(hit_hashes)
-        if pdf.empty:
-            return []
-        arr = index.dl_array()
-        for shard, grp in pdf.groupby("shard"):
-            base = int(shard) * span
-            dl = arr[base : base + span]
-            if dl.shape[0] < span:
-                dl = np.concatenate([dl, np.zeros(span - dl.shape[0])])
-            if pairs_fn is not None:
-                pairs.extend(pairs_fn(grp, dl, base))
-            else:
-                pairs.extend(
-                    _score_wand(grp, dl, base, ordered_terms, stats.k1,
-                                stats.b, stats.avgdl, k, required,
-                                after=after, term_fns=term_fns,
-                                tomb=exclude)
-                )
-        if pairs_fn is not None and exclude is not None and pairs:
-            dead = set(exclude.tolist())
-            pairs = [p for p in pairs if int(p[0]) not in dead]
-    pairs.sort(key=lambda e: (-e[1], e[0]))
-    return [
-        (int(d), float(s))
-        for d, s in pairs[: (final_k if final_k is not None else k)]
-    ]
-
-
-def _driver_search(
-    index: Index,
-    ordered_terms: list[tuple[int, str, float]],
-    buckets: list[int],
-    hit_hashes: list[int],
-    k: int,
-    mode: str,
-    algorithm: str,
-    pairs_fn=None,
-    exclude=None,
-    final_k: int | None = None,
-    stats: IndexStats | None = None,
-    after: tuple[int, float] | None = None,
-    term_fns: dict | None = None,
-) -> DataFrame:
-    """:func:`_driver_search_pairs` wrapped back into the DataFrame
-    contract (typical latency: milliseconds instead of the ~0.5 s
-    distributed-job floor). Falls back implicitly only through
-    search_topk's `serving` gate — the function itself assumes the
-    driver-pinned dl array exists."""
-    spark = index.spark
-    top = _driver_search_pairs(
-        index, ordered_terms, hit_hashes, k, mode, algorithm,
-        pairs_fn=pairs_fn, exclude=exclude, final_k=final_k, stats=stats,
-        after=after, term_fns=term_fns,
-    )
-    if not top:
-        return _empty_df(spark, TOPK_SCHEMA)
-    out = pd.DataFrame(top, columns=["doc_id", "score"]).astype(
-        {"doc_id": "int64", "score": "float64"}
-    )
-    return spark.createDataFrame(out)
-
-
-def _make_shard_scorer(ordered_terms: list[tuple[int, str, float]],
-                       stats: IndexStats, k: int, algorithm: str,
-                       dl_bc=None, mode: str = "or", pairs_fn=None,
-                       require_dl: bool = False,
-                       after: tuple[int, float] | None = None,
-                       term_fns: dict | None = None,
-                       tomb: np.ndarray | None = None):
-    """Scorer for one shard. With ``dl_bc`` (broadcast dense doc_len
-    array) it is an ``applyInPandas`` group function over blocks only;
-    without, a cogroup function joining blocks with the shard's dl rows.
-    ``pairs_fn(left, dl, base) -> [(doc_id, score)]`` overrides the
-    default dense/WAND scoring (used by phrase_search). ``require_dl``
-    (filtered search, dense only) drops docs whose dl-page entry is
-    absent — the page then IS the eligibility mask. ``tomb`` (sorted
-    tombstoned doc_ids, at most ``TOMBSTONE_OVERFETCH_MAX``) rides in
-    the closure and is masked inside the dense/WAND scorer."""
-    if require_dl and (algorithm != "dense" or dl_bc is not None):
-        raise ValueError("require_dl implies the dense cogroup scorer")
+def _score_shard(
+    queries: list[_Query], stats: IndexStats, k: int, mode: str,
+    dl: np.ndarray, base: int, rows_for, frame,
+    tomb: np.ndarray | None = None,
+    require_dl: bool = False,
+    tf_cache: "_ByteLRU | None" = None,
+    shard: int | None = None,
+) -> list[tuple[object, list[tuple[int, float]]]]:
+    """The one per-shard scorer, called by the driver loop and the
+    executor plan alike: every query of ``queries`` over one shard,
+    ``[(qid, pairs)]`` with each query's shard-local top k.
+    ``rows_for(term_hash)`` gives a term's block columns here (dense),
+    ``frame()`` the shard's posting rows (WAND, ``pairs_fn``). Dense
+    queries share one decode cache, so each term's blocks decode, and
+    their idf-free partial computes, once per shard (see
+    :func:`_score_dense`). ``tomb`` (sorted tombstoned doc_ids) is
+    masked inside dense and WAND before top-k selection; a
+    ``pairs_fn`` over-retrieves ``k + |tomb|`` itself, and its pairs
+    are filtered here — against ``tomb``, and against the eligibility
+    page when ``require_dl``."""
     k1, b, avgdl = stats.k1, stats.b, stats.avgdl
-    span = stats.shard_span
-    required = len(ordered_terms) if mode == "and" else 0
-
-    def _score(left: pd.DataFrame, dl: np.ndarray, base: int):
-        if pairs_fn is not None:
-            pairs = pairs_fn(left, dl, base)
-        elif algorithm == "dense":
-            pairs = _score_dense(left, dl, base, ordered_terms, k1, b, avgdl,
-                                 k, required, require_dl=require_dl,
-                                 after=after, term_fns=term_fns, tomb=tomb)
-        else:
-            pairs = _score_wand(left, dl, base, ordered_terms, k1, b, avgdl,
-                                k, required, after=after, term_fns=term_fns,
+    shared: dict = {}
+    out = []
+    for q in queries:
+        required = len(q.terms) if mode == "and" else 0
+        if q.algorithm == "dense":
+            pairs = _score_dense(
+                rows_for, dl, base, q.terms, k1, b, avgdl, k, required,
+                require_dl=require_dl,
+                decode_cache=shared if q.term_fns is None else None,
+                tf_cache=tf_cache, shard=shard, after=q.after,
+                term_fns=q.term_fns, tomb=tomb,
+            )
+        elif q.algorithm == "wand":
+            pairs = _score_wand(frame(), dl, base, q.terms, k1, b, avgdl, k,
+                                required, after=q.after, term_fns=q.term_fns,
                                 tomb=tomb)
-        return pd.DataFrame(pairs, columns=["doc_id", "score"]).astype(
-            {"doc_id": "int64", "score": "float64"}
-        )
-
-    _empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                           "score": pd.Series(dtype="float64")})
-
-    if dl_bc is not None:
-        def scorer_bc(left: pd.DataFrame) -> pd.DataFrame:
-            if left.empty:
-                return _empty.copy()
-            base = int(left["shard"].iat[0]) * span
-            dl = dl_bc.value[base : base + span]
-            if dl.shape[0] < span:
-                dl = np.concatenate([dl, np.zeros(span - dl.shape[0])])
-            return _score(left, dl, base)
-
-        return scorer_bc
-
-    def scorer(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty or right.empty:
-            return _empty.copy()
-        base = int(left["shard"].iat[0]) * span
-        dl = np.zeros(span, dtype=np.float64)
-        ridx = right["doc_id"].to_numpy(np.int64) - base
-        dl[ridx] = right["doc_len"].to_numpy(np.float64)
-        return _score(left, dl, base)
-
-    return scorer
+        else:
+            dead = _shard_tombstones(tomb, base, dl.shape[0])
+            dead = set() if dead is None else set(dead.tolist())
+            pairs = [
+                (d, s) for d, s in q.algorithm(frame(), dl, base)
+                if d not in dead and (not require_dl or dl[d - base] > 0)
+            ]
+        out.append((q.qid, pairs))
+    return out
 
 
 def _partial(tf: np.ndarray, dl: np.ndarray, k1: float, b: float, avgdl: float) -> np.ndarray:
@@ -1907,7 +1628,7 @@ def _topk_pairs(
         order = cand[np.lexsort((doc_ids[cand], -scores[cand]))]
     else:
         order = np.lexsort((doc_ids, -scores))[:k]
-    return [(int(doc_ids[i]), float(scores[i])) for i in order]
+    return list(zip(doc_ids[order].tolist(), scores[order].tolist()))
 
 
 def _shard_tombstones(tomb, base: int, span: int) -> np.ndarray | None:
@@ -1937,7 +1658,7 @@ def _block_columns(left: pd.DataFrame):
 
 
 def _score_dense(
-    left: pd.DataFrame, dl: np.ndarray, base: int,
+    rows_for, dl: np.ndarray, base: int,
     ordered_terms: list[tuple[int, str, float]],
     k1: float, b: float, avgdl: float, k: int,
     required: int = 0,
@@ -1945,34 +1666,30 @@ def _score_dense(
     decode_cache: dict | None = None,
     tf_cache: "_ByteLRU | None" = None,
     shard: int | None = None,
-    rows_for=None,
     after: tuple[int, float] | None = None,
     term_fns: dict | None = None,
     tomb: np.ndarray | None = None,
 ) -> list[tuple[int, float]]:
     """Dense accumulator over one shard. ``rows_for(term_hash)``
     returns the term's block columns in this shard
-    (:func:`_block_arrays`; :func:`_block_columns` over ``left`` by
-    default) or None.
+    (:func:`_block_arrays`) or None.
     ``tomb`` (sorted tombstoned doc_ids, whole index) is an
     eligibility mask applied before top-k selection, like ``after``."""
     span = dl.shape[0]
     scores = np.zeros(span, dtype=np.float64)
     nterms = np.zeros(span, dtype=np.int32)
-    if rows_for is None:
-        rows_for = _block_columns(left)
 
     present = 0
     # ordered_terms is in ascending term-string order => per-doc
     # summation order matches the oracle. All of a term's blocks decode
     # in ONE batched pass (codec.decode_blocks) — block order is
     # irrelevant for the dense accumulator, so no sort either.
-    # ``decode_cache`` (batch serving: term_hash -> (off, partial))
-    # shares each term's decode + idf-free BM25 partial across the
-    # queries of one shard; the cached partial is the SAME float array
-    # the uncached path computes, and scores still accumulate as
-    # ``idf * partial`` per term in ascending term order, so batch
-    # scores are bit-identical to single-query scores.
+    # ``decode_cache`` (term_hash -> (off, partial), one per shard of a
+    # scorer call) shares each term's decode + idf-free BM25 partial
+    # across the dense queries of that call; the cached partial is the
+    # SAME float array the uncached path computes, and scores still
+    # accumulate as ``idf * partial`` per term in ascending term order,
+    # so batch scores are bit-identical to single-query scores.
     # ``tf_cache`` (driver serving, cross-QUERY: (term_hash, shard) ->
     # decoded (offsets, tf)) additionally skips the varint decode for
     # hot terms; the partial is recomputed per query from the cached
@@ -1996,8 +1713,8 @@ def _score_dense(
                 if term_fns is not None:
                     # pluggable similarity (ranking.py): the per-term
                     # fn returns the FULL contribution (weight folded
-                    # in), so no idf multiply below. decode_cache
-                    # (batch serving) never co-exists with term_fns.
+                    # in), so no idf multiply below; such a query
+                    # gets no shared decode_cache (_score_shard).
                     got = (off, term_fns[th](dt[1], dl[off]))
                 else:
                     got = (off, _partial(dt[1], dl[off], k1, b, avgdl))

@@ -55,11 +55,12 @@ from pyspark.sql import functions as F
 
 from .index_build import build_index
 from .query_exec import (
-    DL_BROADCAST_MAX_DOCS,
+    TOMBSTONE_OVERFETCH_MAX,
     Index,
-    _driver_search_pairs,
+    _Query,
+    _driver_score,
     _empty_df,
-    _execute_topk,
+    _execute,
     _federated_plan,
 )
 
@@ -305,27 +306,27 @@ def search_time_range(
     if serving == "auto":
         serving = (
             "driver"
-            if all(ix.dl_array() is not None for ix in idxs)
+            if all(ix.dl_array() is not None
+                   and ix.tombstone_count() <= TOMBSTONE_OVERFETCH_MAX
+                   for ix in idxs)
             else "spark"
         )
+    alt = "search_time_range(serving='spark')"
 
     rows: list[tuple[str, int, float]] = []
     parts: list[DataFrame] = []
     for i, ix, stats_g, ordered, algo in plan:
         name = names[i]
         if name not in boundary:
+            q = _Query(None, ordered, algo)
             if serving == "driver":
                 rows.extend(
                     (name, d, s)
-                    for d, s in _driver_search_pairs(
-                        ix, ordered, sorted(h for h, _, _ in ordered),
-                        k, mode, algo, exclude=ix.tombstone_array(),
-                        stats=stats_g,
-                    )
+                    for d, s in _driver_score(ix, stats_g, [q], k, mode,
+                                              alt)[None]
                 )
             else:
-                res = _execute_topk(ix, stats_g, ordered, k, mode, "spark",
-                                    algo, None)
+                res = _execute(ix, stats_g, [q], k, mode, "spark")
                 parts.append(res.select(
                     F.lit(name).alias("period"), "doc_id", "score"
                 ))
@@ -333,18 +334,10 @@ def search_time_range(
         # boundary period: the range is an eligibility mask applied
         # BEFORE top-k (masking after would under-fill k)
         if serving == "driver":
-            if ix.dl_array() is None:
-                raise ValueError(
-                    f"period {name} too large for driver serving; use "
-                    "serving='spark'"
-                )
             allowed = _allowed_ids(tpi, name, lo_us, hi_us)
             k_all = ix.stats.num_shards * ix.stats.shard_span
-            pairs = _driver_search_pairs(
-                ix, ordered, sorted(h for h, _, _ in ordered), k_all,
-                mode, "dense", exclude=ix.tombstone_array(),
-                stats=stats_g,
-            )
+            pairs = _driver_score(ix, stats_g, [_Query(None, ordered)],
+                                  k_all, mode, alt)[None]
             if pairs:
                 ids = np.fromiter((d for d, _ in pairs), dtype=np.int64,
                                   count=len(pairs))
@@ -362,8 +355,8 @@ def search_time_range(
                 )
                 .select("doc_id")
             )
-            res = _execute_topk(ix, stats_g, ordered, k, mode, "spark",
-                                algo, flt)
+            res = _execute(ix, stats_g, [_Query(None, ordered, algo)], k,
+                           mode, "spark", flt)
             parts.append(res.select(
                 F.lit(name).alias("period"), "doc_id", "score"
             ))

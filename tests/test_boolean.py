@@ -166,11 +166,16 @@ def test_boolean_respects_tombstones(spark, tmp_path):
     out = str(tmp_path / "idx")
     build_index(spark, docs, out, n_buckets=4, block_size=4)
     idx = Index.load(spark, out)
-    before = {d for d, _ in _pairs(search_topk_boolean(idx, "spark NOT vector"))}
-    assert 0 in before
+    q = "spark NOT vector"
+    servings = ("driver", "spark")
+    before = {s: _pairs(search_topk_boolean(idx, q, serving=s))
+              for s in servings}
+    assert 0 in {d for d, _ in before["driver"]}
+    assert before["spark"] == before["driver"]
     delete_docs(idx, [0])
-    after = {d for d, _ in _pairs(search_topk_boolean(idx, "spark NOT vector"))}
-    assert after == before - {0}
+    for s in servings:
+        after = _pairs(search_topk_boolean(idx, q, serving=s))
+        assert after == [p for p in before[s] if p[0] != 0], s
 
 
 def test_boolean_tuned_k1_b(bool_setup):

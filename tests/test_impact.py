@@ -438,6 +438,39 @@ def test_batch_rows_identity(imp_index):
     assert info["certified"] >= 1  # champions actually served some
 
 
+def test_batch_rows_past_driver_norms_limit_refuses_per_query(
+    imp_index, monkeypatch
+):
+    """Past DL_BROADCAST_MAX_DOCS the uncertified remainder has no
+    dense fallback: ImpactRefused names exactly the refused query_ids
+    and carries the certified pages, bit-identical to the unrestricted
+    index's; a certified no-hit query is neither refused nor a key."""
+    from hadoop_search_engine_spark.operators import query_exec as qx
+    from hadoop_search_engine_spark.operators.impact import (
+        ImpactRefused,
+        impact_topk_batch_rows,
+    )
+
+    ix = imp_index
+    head, _, tail = _query_set(ix)
+    # k past what M champions cover: the head query cannot certify
+    queries = {"h0": head[0], "t": tail[0], "none": "zzznotaterm"}
+    want = qx.search_topk_batch_rows(ix, queries, k=700)
+    monkeypatch.setattr(qx, "DL_BROADCAST_MAX_DOCS", 10)
+    ix2 = Index.load(ix.spark, ix.out_dir)
+    assert ix2.dl_array() is None
+    info = {}
+    with pytest.raises(ImpactRefused) as ei:
+        impact_topk_batch_rows(ix2, queries, k=700, info=info)
+    err = ei.value
+    assert "h0" in err.refused and "h0" in str(err)
+    assert set(err.refused) | set(err.certified) == {"h0", "t"}
+    assert not set(err.refused) & set(err.certified)
+    assert err.certified == {q: want[q] for q in err.certified}
+    assert info["certified"] + info["dense_batch"] == len(queries)
+    assert info["dense_batch"] == len(err.refused)
+
+
 def test_cli_build_and_serve(imp_index, tmp_path, capsys):
     """jobs/maintain.py --build-impact + jobs/search.py --algorithm
     impact round-trip at the CLI surface, rows identical to dense."""

@@ -161,8 +161,11 @@ def test_vacuum_positional_phrase(spark, tiny_corpus, tmp_path):
     assert before, "fixture phrase must hit"
     dead = [before[0][0]] + list(range(100, 120, 3))
     delete_docs(idx, dead)
-    masked = _pairs(phrase_search(idx, phrase, k=10))
-    assert before[0][0] not in {d for d, _ in masked}
+    live = [p for p in before if p[0] not in dead]
+    for serving in ("driver", "spark"):
+        masked = _pairs(phrase_search(idx, phrase, k=10, serving=serving))
+        assert before[0][0] not in {d for d, _ in masked}, serving
+        assert masked[:len(live)] == live, serving
 
     vac = vacuum_index(idx)
     fresh_dir = str(tmp_path / "pos_fresh")
@@ -172,9 +175,10 @@ def test_vacuum_positional_phrase(spark, tiny_corpus, tmp_path):
         fresh_dir, num_shards=4, n_buckets=8, block_size=16, positions=True,
     )
     fresh = Index.load(spark, fresh_dir)
-    assert _pairs(phrase_search(vac, phrase, k=10)) == _pairs(
-        phrase_search(fresh, phrase, k=10)
-    )
+    for serving in ("driver", "spark"):
+        assert _pairs(phrase_search(vac, phrase, k=10, serving=serving)) == (
+            _pairs(phrase_search(fresh, phrase, k=10, serving=serving))
+        ), serving
 
 
 def test_delete_by_query_semantics(spark, tiny_corpus, tmp_path):
