@@ -11,7 +11,7 @@
 PKG := hadoop_search_engine_spark
 DIST := dist/$(PKG).zip
 
-.PHONY: package test bench perf scaling contract clean
+.PHONY: package test bench perf perf-pairs scaling contract clean
 
 package:
 	mkdir -p dist
@@ -33,6 +33,13 @@ perf:
 	for w in serve_hot refresh; do \
 		python3 perfbench/run.py --workload $$w --seed 1 --seconds 12 --trace 0 || exit 1; \
 	done
+
+# Alternating parent/change pairs of the same two workloads:
+# `make perf-pairs BASE=<parent ref> PAIRS=10` (tools/perf_pairs.py).
+BASE ?= HEAD~1
+PAIRS ?= 10
+perf-pairs:
+	python3 tools/perf_pairs.py --base $(BASE) --pairs $(PAIRS)
 
 scaling:
 	python bench_scaling.py

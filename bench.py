@@ -174,7 +174,7 @@ def main() -> None:
     # same 50 queries again, now HOT: the first pass filled the
     # per-Index postings LRU (Index.postings_rows_by_term), so this pass is
     # the steady-state serving-node shape — Zipfian-hot terms score
-    # straight from pinned rows, no parquet read
+    # straight from their pinned block columns, no parquet read
     lat = []
     for rq in fixture_qs:
         t0 = time.time()

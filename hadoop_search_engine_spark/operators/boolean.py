@@ -50,10 +50,8 @@ from __future__ import annotations
 import functools
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions import codec
 from ..functions.tokenizer import tokenize
 from .query_exec import (
     TOPK_SCHEMA,
@@ -250,7 +248,7 @@ def _eval_node(node, presence: dict) -> np.ndarray:
 
 
 def _boolean_pairs(
-    left: pd.DataFrame, dl: np.ndarray, base: int,
+    rows_for, dl: np.ndarray, base: int,
     ast,
     leaf_hashes: dict,
     ordered_terms: list,
@@ -260,7 +258,6 @@ def _boolean_pairs(
     presence vectors, evaluate the AST, score eligible docs over the
     positive terms (ascending term order — oracle summation order)."""
     span = dl.shape[0]
-    hashes = left["term_hash"].to_numpy(np.int64)
     false_vec = np.zeros(span, dtype=bool)
     presence: dict = {}
     decoded: dict = {}
@@ -268,15 +265,11 @@ def _boolean_pairs(
         if th is None:
             presence[term] = false_vec
             continue
-        grp = left[hashes == th]
-        if not len(grp):
+        blocks = rows_for(th)
+        if blocks is None:
             presence[term] = false_vec
             continue
-        d, t, _ = codec.decode_blocks(
-            grp["doc_ids"].tolist(), grp["tfs"].tolist(),
-            grp["n_docs"].to_numpy(np.int64),
-            grp["first_doc_id"].to_numpy(np.int64),
-        )
+        d, t, _ = blocks.decode()
         off = d - base
         decoded[term] = (off, t)
         v = np.zeros(span, dtype=bool)

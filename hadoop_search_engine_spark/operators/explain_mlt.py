@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 import numpy as np
 import pandas as pd
 
-from ..functions import codec
 from ..functions.tokenizer import tokenize
 from .query_exec import (
     EXPLAIN_SCHEMA,
@@ -22,6 +21,7 @@ from .query_exec import (
     _lookup_terms,
     _partial,
     _resolve_query,
+    _rows_for,
     _similarity_term_fns,
     search_topk,
 )
@@ -169,23 +169,14 @@ def explain_score(
             return _empty_df(spark, EXPLAIN_SCHEMA)
         dl = float(row["doc_len"])
 
-    hit_hashes = sorted(h for h, _, _ in ordered_terms)
-    pdf = index.postings_rows(hit_hashes)
-    if len(pdf):
-        pdf = pdf[pdf["shard"].to_numpy(np.int64) == shard]
+    rows_for = _rows_for(
+        index.postings_rows_by_term(h for h, _, _ in ordered_terms), shard)
     rows = []
-    hashes = pdf["term_hash"].to_numpy(np.int64) if len(pdf) else None
     for th, term, idf in ordered_terms:  # ascending term order
-        if hashes is None:
+        blocks = rows_for(th)
+        if blocks is None:
             continue
-        grp = pdf[hashes == th]
-        if not len(grp):
-            continue
-        d, t, _ = codec.decode_blocks(
-            grp["doc_ids"].tolist(), grp["tfs"].tolist(),
-            grp["n_docs"].to_numpy(np.int64),
-            grp["first_doc_id"].to_numpy(np.int64),
-        )
+        d, t, _ = blocks.decode()
         j = int(np.searchsorted(d, doc_id))
         if j >= d.shape[0] or int(d[j]) != doc_id:
             continue  # term absent from this doc: contributes exact 0

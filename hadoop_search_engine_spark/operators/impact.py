@@ -88,6 +88,7 @@ from .query_exec import (
     Index,
     _empty_df,
     _partial,
+    _postings_entries,
     _resolve_query,
     _topk_pairs,
 )
@@ -476,8 +477,9 @@ def _probe_tf(
 
     ``direct`` (the beyond-norms-limit serving mode): fetch posting
     rows through a shard-filtered pyarrow read — only the shards a
-    probed doc lives in are listed/read — instead of the per-term LRU
-    (which pulls the term's WHOLE df-sized frame; fine on a hot
+    probed doc lives in are listed/read — split by the same
+    :func:`~.query_exec._postings_entries`, instead of the per-term
+    LRU (which pulls the term's WHOLE df-sized postings; fine on a hot
     serving node with pinned norms, wrong past the driver limit where
     df can be corpus-scale)."""
     out = np.zeros(want.shape[0], dtype=np.int64)
@@ -495,29 +497,17 @@ def _probe_tf(
             & (pads.field("term_hash") == int(th))
             & pads.field("shard").isin(wshards)
         )
-        f = (
-            index._postings_dataset()
-            .to_table(
-                filter=filt,
-                columns=["shard", "first_doc_id", "n_docs",
-                         "doc_ids", "tfs"],
-            )
-            .to_pandas()
-        )
+        p = _postings_entries(
+            index._postings_dataset().to_table(filter=filt), [int(th)]
+        )[int(th)]
     else:
-        f = index.postings_rows_by_term([th]).get(th)
-    if f is None or not len(f):
-        return out
-    span = index.stats.shard_span
-    shards = f["shard"].to_numpy(np.int64)
-    firsts = f["first_doc_id"].to_numpy(np.int64)
-    wshard = want // span
+        p = index.postings_rows_by_term([th])[int(th)]
+    wshard = want // index.stats.shard_span
     for s in np.unique(wshard):
-        rows_in = np.flatnonzero(shards == s)
-        if rows_in.size == 0:
+        blocks = p.shards.get(int(s))
+        if blocks is None:
             continue
-        rows_in = rows_in[np.argsort(firsts[rows_in])]
-        fi = firsts[rows_in]
+        fi = blocks.first_doc_id  # (shard, block_id) order: ascending
         wmask = wshard == s
         w = want[wmask]
         widx = np.flatnonzero(wmask)
@@ -525,12 +515,11 @@ def _probe_tf(
         for blk in np.unique(bi):
             if blk < 0:
                 continue
-            row = f.iloc[rows_in[blk]]
-            n = int(row["n_docs"])
+            n = int(blocks.n_docs[blk])
             d = codec.decode_doc_ids(
-                bytes(row["doc_ids"]), n=n, base=int(row["first_doc_id"])
+                bytes(blocks.doc_ids[blk]), n=n, base=int(fi[blk])
             )
-            t = codec.decode_tfs(bytes(row["tfs"]), n=n)
+            t = codec.decode_tfs(bytes(blocks.tfs[blk]), n=n)
             wb = np.flatnonzero(bi == blk)
             ok, pos = _member(d, w[wb])
             out[widx[wb[ok]]] = t[pos[ok]]
@@ -566,24 +555,19 @@ def _impact_pairs(
         return None
     rows = imp.rows_for([h for h, _, _ in ordered_terms])
     need_full = [h for h, _, _ in ordered_terms if rows.get(h) is None]
-    full_frames = (
+    full_postings = (
         index.postings_rows_by_term(need_full) if need_full else {}
     )
 
-    def _full_entry(th: int, idf: float, f) -> "_TermEntry | None":
+    def _full_entry(th: int, idf: float, p) -> "_TermEntry | None":
         """A term's complete posting list as a per_term entry (exact,
         rest = 0) — the initial shape for sub-df_min terms and the
         progressive-expansion shape for champion terms whose bound
         blocked the proof."""
-        if f is None or not len(f):
+        if p is None or not p.shards:
             return None
-        d, t, _ = codec.decode_blocks(
-            f["doc_ids"].tolist(), f["tfs"].tolist(),
-            f["n_docs"].to_numpy(np.int64),
-            f["first_doc_id"].to_numpy(np.int64),
-        )
-        order = np.argsort(d)  # rows arrive per (shard, block); ids unique
-        d, t = d[order], t[order]
+        # blocks in (shard, block_id) order: doc_ids already ascend
+        d, t, _ = p.blocks.decode()
         dl_vec = arr[d] if arr is not None else _dl_lookup(index, d)
         contrib = idf * _partial(t, dl_vec, k1, b, avgdl)
         return _TermEntry(d, contrib, 0.0, t, True, th, idf, dl_vec,
@@ -594,7 +578,7 @@ def _impact_pairs(
     for th, _term, idf in ordered_terms:
         r = rows.get(th)
         if r is None:
-            e = _full_entry(th, idf, full_frames.get(th))
+            e = _full_entry(th, idf, full_postings.get(th))
             if e is not None:
                 per_term.append(e)
             continue  # absent: lexicon hit with no postings rows

@@ -8,7 +8,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 import numpy as np
-import pandas as pd
 
 from ..functions import codec
 from ..functions.tokenizer import tokenize
@@ -27,8 +26,20 @@ from .query_exec import (
 from .term_expand import suggest_terms
 
 
+def _occurrences(blocks, base: int):
+    """A term's blocks in one shard, batch-decoded with positions:
+    ``(doc_ids, tfs, keys)``, every occurrence as a packed
+    ``(local_doc, pos)`` key. The positional build truncates
+    occurrences at pos < 2^20, so 21 bits never carry into the doc
+    bits and "advance one token" is key + 1. Keys ascend (doc-major,
+    pos-ascending), so set ops stay sorted-unique."""
+    d, t, _ = blocks.decode()
+    P = codec.decode_positions(b"".join(map(bytes, blocks.positions)), t)
+    return d, t, ((np.repeat(d, t) - base) << np.int64(21)) | P
+
+
 def _phrase_pairs(
-    left: pd.DataFrame, dl: np.ndarray, base: int,
+    rows_for, dl: np.ndarray, base: int,
     ordered_terms: list[tuple[int, str, float]],
     seq_hashes: list[int],
     k1: float, b: float, avgdl: float, k: int,
@@ -71,46 +82,24 @@ def _phrase_pairs(
     """
     if dl.shape[0] >= (1 << 42):
         raise ValueError("shard_span too large for packed (doc, pos) keys")
-    hashes = left["term_hash"].to_numpy(np.int64)
     per_term: dict[int, tuple] = {}
     for th, _term, _idf in ordered_terms:
-        grp = left[hashes == th]
-        if not len(grp):
+        blocks = rows_for(th)
+        if blocks is None:
             return []  # a phrase term absent from this shard
-        grp = grp.sort_values("block_id")
-        d, t, _ = codec.decode_blocks(
-            grp["doc_ids"].tolist(), grp["tfs"].tolist(),
-            grp["n_docs"].to_numpy(np.int64),
-            grp["first_doc_id"].to_numpy(np.int64),
-        )
-        pos_blob = b"".join(map(bytes, grp["positions"].tolist()))
-        P = codec.decode_positions(pos_blob, t)
-        # every occurrence as a packed (local_doc, pos) key — the
-        # positional build truncates occurrences at pos < 2^20, so 21
-        # bits never carry into the doc bits and "advance one token" is
-        # key + 1. Keys ascend (doc-major, pos-ascending), so set ops
-        # stay sorted-unique.
-        keys = ((np.repeat(d, t) - base) << np.int64(21)) | P
-        per_term[th] = (d, t, keys)
+        per_term[th] = _occurrences(blocks, base)
 
     exp_present: list[tuple[str, float, np.ndarray, np.ndarray]] = []
     merged = None
     if exp_terms is not None:
         exp_keys: list[np.ndarray] = []
         for th, term, idf in exp_terms:
-            grp = left[hashes == th]
-            if not len(grp):
+            blocks = rows_for(th)
+            if blocks is None:
                 continue  # expansion absent from this shard: optional
-            grp = grp.sort_values("block_id")
-            d, t, _ = codec.decode_blocks(
-                grp["doc_ids"].tolist(), grp["tfs"].tolist(),
-                grp["n_docs"].to_numpy(np.int64),
-                grp["first_doc_id"].to_numpy(np.int64),
-            )
-            pos_blob = b"".join(map(bytes, grp["positions"].tolist()))
-            P = codec.decode_positions(pos_blob, t)
+            d, t, keys = _occurrences(blocks, base)
             exp_present.append((term, idf, d, t))
-            exp_keys.append(((np.repeat(d, t) - base) << np.int64(21)) | P)
+            exp_keys.append(keys)
         if not exp_keys:
             return []
         merged = np.unique(np.concatenate(exp_keys))

@@ -20,12 +20,15 @@ over the sharded block index, whatever the call:
     ``pairs_fn`` (phrase, boolean) — with the ``after`` cursor and the
     tombstone mask applied before top-k selection.
   * driver loop (:func:`_driver_score`): bucket-pruned pyarrow reads
-    of the probed postings through the per-Index hot LRU
-    (:meth:`Index.postings_rows_by_term`), then the scorer once per
-    shard — no Spark job. It serves the ``*_rows`` functions and every
-    ``serving="driver"`` (or small-index ``"auto"``) call.
+    of the probed postings, split straight from the Arrow table into
+    per-term NumPy block columns (:class:`_Postings`, no pandas) and
+    kept in the per-Index hot LRU (:meth:`Index.postings_rows_by_term`),
+    then the scorer once per shard — no Spark job. It serves the
+    ``*_rows`` functions and every ``serving="driver"`` (or small-index
+    ``"auto"``) call.
   * executor plan (:func:`_execute`): one pruned postings scan grouped
-    by shard into the same scorer (``applyInPandas``), doc lengths from
+    by shard into the same scorer (``applyInPandas``; each shard's
+    frame is split once into the same block columns), doc lengths from
     a session broadcast — or, past ``DL_BROADCAST_MAX_DOCS`` or under a
     ``doc_filter`` / large tombstone set, each shard's doc_stats page
     cogrouped in as the eligibility page. Each shard emits its local
@@ -143,15 +146,16 @@ LEXICON_CACHE_MAX_TERMS = 2_000_000
 TOMBSTONE_OVERFETCH_MAX = 10_000
 
 # Driver-serving hot-postings cache budget (MB; env
-# SPARK_GRAFT_POSTINGS_CACHE_MB overrides, <= 0 disables). Web query
-# logs are Zipfian — a small set of head terms dominates — so a
-# serving node that pins recently-probed posting rows answers hot
+# SPARK_GRAFT_POSTINGS_CACHE_MB overrides, <= 0 retains nothing). Web
+# query logs are Zipfian — a small set of head terms dominates — so a
+# serving node that pins recently-probed postings answers hot
 # queries from memory instead of re-reading parquet per query (the
 # analog of Lucene/OS page cache on a search node). The cache lives on
 # the Index instance (same lifetime as the cached pyarrow dataset
-# listing), keyed by term_hash; entries are the raw stored rows
-# (parameter-free (max_tf, min_dl) block bounds), so tuned k1/b
-# queries and the tombstone mask reuse them unchanged.
+# listing), keyed by term_hash; entries are the term's stored block
+# columns (:class:`_Postings`: blobs still encoded, parameter-free
+# (max_tf, min_dl) block bounds), so tuned k1/b queries and the
+# tombstone mask reuse them unchanged.
 POSTINGS_CACHE_MB_DEFAULT = 256.0
 
 # Second-level driver cache: DECODED (offsets, tf) arrays per
@@ -176,42 +180,45 @@ def _postings_cache_bytes() -> int:
 
 
 class _ByteLRU:
-    """Byte-bounded LRU of numpy-array tuples (driver-side caches)."""
+    """Byte-bounded LRU (the driver-side postings and decode caches).
+    An entry is charged ``nbytes`` when given, else the summed
+    ``nbytes`` of its NumPy arrays; a budget <= 0 retains nothing."""
 
     __slots__ = ("cap", "_d", "nbytes")
 
     def __init__(self, cap: int):
-        from collections import OrderedDict
-
         self.cap = cap
-        self._d: "OrderedDict" = OrderedDict()
+        self._d: dict = {}  # insertion order is recency order
         self.nbytes = 0
 
     def __len__(self) -> int:
         return len(self._d)
 
+    def __contains__(self, key) -> bool:
+        return key in self._d
+
     def get(self, key):
-        hit = self._d.get(key)
+        hit = self._d.pop(key, None)
         if hit is None:
             return None
-        self._d.move_to_end(key)
+        self._d[key] = hit  # now the most recent
         return hit[0]
 
-    def put(self, key, value) -> None:
+    def put(self, key, value, nbytes: int | None = None) -> None:
         if key in self._d:
             return
-        n = sum(int(a.nbytes) for a in value) if value else 0
+        n = nbytes if nbytes is not None else (
+            sum(int(a.nbytes) for a in value) if value else 0)
         self._d[key] = (value, n)
         self.nbytes += n
         while self.nbytes > self.cap and self._d:
-            _, (_, n0) = self._d.popitem(last=False)
-            self.nbytes -= n0
+            self.nbytes -= self._d.pop(next(iter(self._d)))[1]
 
 
-# Postings-LRU charge per cell (an int64 / float64 value or an object
-# pointer in the cached frame) and per entry (tuple, dict slot and
-# frame header, so even a cached empty miss costs something); the
-# blobs themselves are charged by their stored length, ``n_bytes``.
+# Postings-LRU charge per cell (an int64 value or a blob pointer in
+# the cached columns) and per entry (tuples, dict slots and array
+# headers, so even a cached empty miss costs something); the blobs
+# themselves are charged by their stored length, ``n_bytes``.
 _PCACHE_CELL_BYTES = 8
 _PCACHE_ENTRY_BYTES = 128
 
@@ -223,57 +230,83 @@ def _runs(keys: np.ndarray) -> list[tuple[int, int]]:
     return [(lo, hi) for lo, hi in zip(cuts[:-1], cuts[1:]) if hi > lo]
 
 
-def _block_arrays(frame: pd.DataFrame) -> tuple:
-    """A posting-row frame's block columns as NumPy arrays — ``(doc_id
-    blobs, tf blobs, n_docs, first_doc_id)``, the arguments of
-    :func:`codec.decode_blocks`."""
-    return (frame["doc_ids"].to_numpy(), frame["tfs"].to_numpy(),
-            frame["n_docs"].to_numpy(np.int64),
-            frame["first_doc_id"].to_numpy(np.int64))
+class _Blocks(NamedTuple):
+    """Posting blocks as NumPy columns in (shard, block_id) order —
+    within a shard, ascending doc_id. The blobs stay encoded:
+    ``doc_ids``, ``tfs`` and ``positions`` are object arrays of the
+    stored varint bytes (``positions`` entries are None on a
+    non-positional index); ``max_tf``/``min_dl`` are each block's
+    parameter-free score-bound pair."""
+
+    first_doc_id: np.ndarray
+    n_docs: np.ndarray
+    doc_ids: np.ndarray
+    tfs: np.ndarray
+    positions: np.ndarray
+    max_tf: np.ndarray
+    min_dl: np.ndarray
+
+    def decode(self):
+        """Every block in one batched varint pass:
+        ``(doc_ids, tfs, offsets)`` (:func:`codec.decode_blocks`)."""
+        return codec.decode_blocks(self.doc_ids, self.tfs, self.n_docs,
+                                   self.first_doc_id)
 
 
-def _postings_entries(pdf: pd.DataFrame, hashes: list[int]) -> dict[int, tuple]:
-    """A pruned postings read -> ``term_hash -> (frame, nbytes,
-    blocks)`` for every hash in ``hashes``: the term's rows as a
-    DataFrame sorted by shard, its cache charge (the rows' stored blob
-    length ``n_bytes`` plus a fixed size per cell and per entry — a
-    deep ``memory_usage`` would walk every blob object in Python), and
-    its block columns (:func:`_block_arrays`) split by shard: ``shard
-    -> (doc_id blobs, tf blobs, n_docs, first_doc_id)``. The columns
-    are pulled out of the read once; each term's are a NumPy take, so
-    no frame is indexed per (term, shard)."""
-    th = pdf["term_hash"].to_numpy(np.int64)
-    sh = pdf["shard"].to_numpy(np.int64)
-    order = np.lexsort((sh, th))  # by term, then shard; stable
+class _Postings(NamedTuple):
+    """One term's postings, the single in-memory form every scorer
+    reads: all of its ``blocks``, their ``shards`` (``shard ->``
+    :class:`_Blocks` slice views) and ``nbytes``, its postings-LRU
+    charge. An absent term has no blocks and no shards."""
+
+    blocks: _Blocks
+    shards: dict
+    nbytes: int
+
+
+def _postings_entries(src, hashes) -> dict[int, _Postings]:
+    """The one splitter from posting rows to :class:`_Postings`, for a
+    pyarrow Table (the driver read) and for a pandas frame (an
+    executor shard's group) alike — both hand out ``src[name]
+    .to_numpy()``. Rows sort once by (term, shard, block_id); a term's
+    columns are one NumPy take of that order (a cached term owns its
+    arrays and keeps no other term's blobs alive), its shards slices
+    of them. Every hash in ``hashes`` gets an entry, an absent one an
+    empty entry. ``nbytes`` is the rows' stored blob length
+    ``n_bytes`` plus a fixed size per cell and per entry — a deep size
+    would walk every blob object in Python."""
+    th = src["term_hash"].to_numpy().astype(np.int64)
+    sh = src["shard"].to_numpy().astype(np.int64)
+    order = np.lexsort((src["block_id"].to_numpy(), sh, th))
     th, sh = th[order], sh[order]
-    cols = _block_arrays(pdf)
-    blob = pdf["n_bytes"].to_numpy(np.int64)
-    cell = _PCACHE_CELL_BYTES * pdf.shape[1]
-    empty = pdf.iloc[0:0]
-    out = {h: (empty, _PCACHE_ENTRY_BYTES, {}) for h in hashes}
+    cols = [src[c].to_numpy() for c in _Blocks._fields]
+    cols = [c if c.dtype == object else c.astype(np.int64) for c in cols]
+    blob = src["n_bytes"].to_numpy().astype(np.int64)
+    cell = _PCACHE_CELL_BYTES * len(cols)
+    empty = _Postings(_Blocks(*(c[:0] for c in cols)), {},
+                      _PCACHE_ENTRY_BYTES)
+    out = dict.fromkeys(hashes, empty)
     for lo, hi in _runs(th):
         rows = order[lo:hi]
-        frame = pdf.take(rows)
-        frame.index = pd.RangeIndex(hi - lo)
-        term_cols = [c[rows] for c in cols]
+        blocks = _Blocks(*(c[rows] for c in cols))
         term_sh = sh[lo:hi]
-        blocks = {int(term_sh[a]): tuple(c[a:b] for c in term_cols)
+        shards = {int(term_sh[a]): _Blocks(*(c[a:b] for c in blocks))
                   for a, b in _runs(term_sh)}
         nbytes = (_PCACHE_ENTRY_BYTES + cell * (hi - lo)
                   + int(blob[rows].sum()))
-        out[int(th[lo])] = (frame, nbytes, blocks)
+        out[int(th[lo])] = _Postings(blocks, shards, nbytes)
     return out
 
 
-def _concat_rows(frames) -> pd.DataFrame:
-    """Per-term posting-row frames as one frame (empty ones dropped)."""
-    frames = list(frames)
-    nonempty = [f for f in frames if len(f)]
-    if not nonempty:
-        return frames[0] if frames else pd.DataFrame()
-    if len(nonempty) == 1:
-        return nonempty[0]
-    return pd.concat(nonempty, ignore_index=True)
+def _rows_for(entries: dict, shard: int):
+    """``rows_for`` of one shard over split postings: ``term_hash ->``
+    the term's :class:`_Blocks` view in ``shard``, or None."""
+
+    def rows_for(th):
+        p = entries.get(th)
+        return None if p is None else p.shards.get(shard)
+
+    return rows_for
 
 
 @dataclass
@@ -287,7 +320,6 @@ class Index:
     _tomb: object = None
     _tomb_n: int | None = None
     _pcache: object = None
-    _pcache_nbytes: int = 0
     _tfc: object = None
 
     _token_fn: object = None
@@ -314,7 +346,7 @@ class Index:
     def _tf_cache(self):
         """Byte-bounded LRU of decoded (offsets, tf) per (term_hash,
         shard) for driver serving, or None when disabled. Lifetime =
-        this Index instance, like the raw-rows LRU."""
+        this Index instance, like the postings LRU."""
         cap = _decode_cache_bytes()
         if cap <= 0:
             return None
@@ -442,59 +474,39 @@ class Index:
             )
         return self._pads
 
-    def postings_rows_by_term(self, hit_hashes) -> dict[int, pd.DataFrame]:
-        """Posting rows for the probed term hashes, driver-side (no
-        Spark job), one frame PER TERM, rows sorted by shard: bucket =
-        pmod(hash, B) prunes at the hive file listing, term_hash is a
-        row-group min/max filter. Rows are cached per term in a
-        byte-bounded LRU (see ``POSTINGS_CACHE_MB_DEFAULT``) so repeated
+    def postings_rows_by_term(self, hit_hashes) -> dict[int, _Postings]:
+        """Postings of the probed term hashes, driver-side (no Spark
+        job), one :class:`_Postings` PER TERM — its block columns in
+        (shard, block_id) order with per-shard views, the one form
+        every scorer reads: bucket = pmod(hash, B) prunes at the hive
+        file listing, term_hash is a row-group min/max filter, and the
+        Arrow table is split straight into NumPy columns
+        (:func:`_postings_entries`, no pandas). Entries are cached per
+        term in a byte-bounded :class:`_ByteLRU` charged from the blob
+        lengths (see ``POSTINGS_CACHE_MB_DEFAULT``), so repeated
         probes of hot terms skip parquet entirely; an uncached query
-        costs ONE dataset read for all of its missing terms. The
-        per-term shape lets the dense scorer iterate terms without
-        re-concatenating frames (``pd.concat`` of blob-object columns
-        profiled at ~20% of hot query time). Each cache entry is
-        ``(frame, nbytes, blocks)``: ``nbytes`` is charged from the blob
-        lengths (see :func:`_postings_entries`), ``blocks`` is the
-        frame's block columns split by shard (:meth:`_shard_blocks`).
-        Cache lifetime is this Index instance — the same snapshot
-        semantics as the cached dataset listing itself (vacuum/merge
-        return a reloaded Index)."""
+        costs ONE dataset read for all of its missing terms. Cache
+        lifetime is this Index instance — the same snapshot semantics
+        as the cached dataset listing itself (vacuum/merge return a
+        reloaded Index)."""
         wanted = list(dict.fromkeys(int(h) for h in hit_hashes))
-        cap = _postings_cache_bytes()
-        if cap <= 0:
-            return {h: e[0] for h, e in self._read_postings(wanted).items()}
         if self._pcache is None:
-            from collections import OrderedDict
-
-            self._pcache = OrderedDict()
-        cache = self._pcache
-        out: dict[int, pd.DataFrame] = {}
-        missing: list[int] = []
-        for h in wanted:
-            hit = cache.get(h)
-            if hit is not None:
-                cache.move_to_end(h)
-                out[h] = hit[0]
-            else:
-                missing.append(h)
+            self._pcache = _ByteLRU(_postings_cache_bytes())
+        out = {h: self._pcache.get(h) for h in wanted}
+        missing = [h for h, p in out.items() if p is None]
         if missing:
             # absent terms cache their empty entry too: a repeated miss
             # (OOV term, stopword-stripped query) must not re-read
-            # parquet every time
-            for h, entry in self._read_postings(missing).items():
-                cache[h] = entry
-                self._pcache_nbytes += entry[1]
-                out[h] = entry[0]
-            # evict least-recent past the byte budget; frames already
-            # collected for THIS query stay alive via the local dict
-            while self._pcache_nbytes > cap and cache:
-                _, entry = cache.popitem(last=False)
-                self._pcache_nbytes -= entry[1]
+            # parquet every time. Entries evicted by these puts stay
+            # alive for THIS query via ``out``.
+            for h, p in self._read_postings(missing).items():
+                self._pcache.put(h, p, p.nbytes)
+                out[h] = p
         return out
 
-    def _read_postings(self, hashes: list[int]) -> dict[int, tuple]:
-        """ONE pruned pyarrow read of ``hashes`` -> per-term cache
-        entries (:func:`_postings_entries`), absent terms included."""
+    def _read_postings(self, hashes: list[int]) -> dict[int, _Postings]:
+        """ONE pruned pyarrow read of ``hashes`` -> per-term entries
+        (:func:`_postings_entries`), absent terms included."""
         import pyarrow.dataset as pads
 
         nb = self.stats.n_buckets
@@ -502,24 +514,8 @@ class Index:
             sorted({h % nb for h in hashes})
         ) & pads.field("term_hash").isin(hashes)
         return _postings_entries(
-            self._postings_dataset().to_table(filter=filt).to_pandas(), hashes
+            self._postings_dataset().to_table(filter=filt), hashes
         )
-
-    def _shard_blocks(self, term_hash: int, frame: pd.DataFrame) -> dict:
-        """``frame``'s block columns split by shard (see
-        :func:`_postings_entries`), from its postings-cache entry when
-        that entry still holds this frame, else split afresh (cache
-        disabled, or entry evicted)."""
-        hit = self._pcache.get(term_hash) if self._pcache else None
-        if hit is not None and hit[0] is frame:
-            return hit[2]
-        return _postings_entries(frame, [term_hash])[term_hash][2]
-
-    def postings_rows(self, hit_hashes) -> pd.DataFrame:
-        """:meth:`postings_rows_by_term` concatenated back into one
-        frame — for the WAND / phrase / boolean paths that group by
-        shard across terms."""
-        return _concat_rows(self.postings_rows_by_term(hit_hashes).values())
 
     def warm(self, top_terms: int = 0) -> dict:
         """Serving-node startup warm-up — the analog of the reference
@@ -527,7 +523,7 @@ class Index:
         queries (server/src/utils/index.js), done proportionately: pin
         the doc-norms array, the lexicon map (+ its length-bucketed
         fuzzy view), the postings dataset listing, and optionally the
-        ``top_terms`` highest-df terms' posting rows into the hot LRU
+        ``top_terms`` highest-df terms' postings into the hot LRU
         (Zipfian traffic means those terms dominate; the byte budget
         still bounds memory). After ``warm``, first-query latency is
         the hot-path latency. Returns a summary of what got pinned."""
@@ -545,11 +541,9 @@ class Index:
             hot = sorted(lm.items(), key=lambda kv: (-kv[1]["df"], kv[0]))
             hashes = [int(v["hash"]) for _, v in hot[:top_terms]]
             if hashes:
-                self.postings_rows(hashes)
-                out["terms_cached"] = (
-                    len(self._pcache) if self._pcache is not None else 0
-                )
-                out["postings_cache_bytes"] = int(self._pcache_nbytes)
+                self.postings_rows_by_term(hashes)
+                out["terms_cached"] = len(self._pcache)
+                out["postings_cache_bytes"] = int(self._pcache.nbytes)
         return out
 
     def tombstone_count(self) -> int:
@@ -1098,10 +1092,11 @@ class _Query(NamedTuple):
     """One query of a scorer call. ``terms`` are its ``(term_hash,
     term, weight)`` triples in ascending term order (weight = idf, any
     boost folded in). ``algorithm`` is ``"dense"``, ``"wand"``, or a
-    ``pairs_fn(left, dl, base) -> [(doc_id, score)]`` over one shard's
-    posting rows (phrase, boolean; their ``terms`` then list every
-    term whose postings the function reads). ``after`` is the query's
-    cursor, ``term_fns`` its similarity table
+    ``pairs_fn(rows_for, dl, base) -> [(doc_id, score)]`` over one
+    shard, where ``rows_for(term_hash)`` gives a term's
+    :class:`_Blocks` there or None (phrase, boolean; their ``terms``
+    then list every term whose postings the function reads).
+    ``after`` is the query's cursor, ``term_fns`` its similarity table
     (:func:`_similarity_term_fns`)."""
 
     qid: object
@@ -1421,16 +1416,18 @@ def _shard_udf(queries: list[_Query], stats: IndexStats, k: int, mode: str,
                batch: bool):
     """:func:`_score_shard` as the executor plan's per-shard function:
     with ``dl_bc`` (broadcast dense doc_len array) a grouped-map
-    function over the shard's posting rows; without, a cogroup
-    function whose right side is the shard's doc_stats page —
-    ``require_dl`` makes that page the eligibility mask. ``tomb``
-    rides in the closure."""
+    function over the shard's posting rows, split once into block
+    columns (:func:`_postings_entries`); without, a cogroup function
+    whose right side is the shard's doc_stats page — ``require_dl``
+    makes that page the eligibility mask. ``tomb`` rides in the
+    closure."""
     span = stats.shard_span
 
     def scorer(left: pd.DataFrame, right: pd.DataFrame | None = None):
         scored = []
         if len(left) and (right is None or len(right)):
-            base = int(left["shard"].iat[0]) * span
+            s = int(left["shard"].iat[0])
+            base = s * span
             if right is None:
                 dl = _pad_dl(dl_bc.value[base : base + span], span)
             else:
@@ -1438,9 +1435,10 @@ def _shard_udf(queries: list[_Query], stats: IndexStats, k: int, mode: str,
                 dl[right["doc_id"].to_numpy(np.int64) - base] = (
                     right["doc_len"].to_numpy(np.float64)
                 )
+            rows_for = _rows_for(_postings_entries(left, ()), s)
             scored = _score_shard(queries, stats, k, mode, dl, base,
-                                  _block_columns(left), lambda: left,
-                                  tomb=tomb, require_dl=require_dl)
+                                  rows_for, tomb=tomb,
+                                  require_dl=require_dl)
         return _pairs_frame(scored, batch)
 
     if dl_bc is not None:
@@ -1460,33 +1458,17 @@ def _pad_dl(dl: np.ndarray, span: int) -> np.ndarray:
 
 def _driver_shards(index: Index, hit_hashes: list[int], span: int):
     """Per-shard inputs of the driver loop: yields ``(shard, base, dl,
-    rows_for, frame)`` for every shard holding a probed term, where
-    ``rows_for(term_hash)`` returns the term's block columns in that
-    shard (or None) and ``frame()`` the shard's posting rows of every
-    probed term (for WAND and ``pairs_fn``; concatenated and grouped
-    on first use). Rows come through :meth:`Index.postings_rows_by_term`
-    (the hot LRU) as per-term NumPy columns split by shard — no pandas
-    indexing per (term, shard)."""
-    frames = index.postings_rows_by_term(hit_hashes)
-    blocks = {h: index._shard_blocks(h, f) for h, f in frames.items()}
+    rows_for)`` for every shard holding a probed term, where
+    ``rows_for(term_hash)`` returns the term's :class:`_Blocks` view in
+    that shard (or None) — the same columns the executor plan splits
+    from its grouped frame. Postings come through
+    :meth:`Index.postings_rows_by_term` (the hot LRU)."""
+    entries = index.postings_rows_by_term(hit_hashes)
     arr = index.dl_array()
-    groups: dict = {}
-
-    def frame(s):
-        if not groups:
-            rows = _concat_rows(frames.values())
-            groups.update(iter(rows.groupby("shard")))
-        return groups[s]
-
-    for s in sorted({s for bs in blocks.values() for s in bs}):
+    for s in sorted({s for p in entries.values() for s in p.shards}):
         base = s * span
-
-        def rows_for(th, _s=s):
-            bs = blocks.get(th)
-            return None if bs is None else bs.get(_s)
-
-        yield (s, base, _pad_dl(arr[base : base + span], span), rows_for,
-               lambda _s=s: frame(_s))
+        yield (s, base, _pad_dl(arr[base : base + span], span),
+               _rows_for(entries, s))
 
 
 def _driver_score(
@@ -1514,11 +1496,11 @@ def _driver_score(
     hashes = sorted({h for q in queries for h, _, _ in q.terms})
     tfc = index._tf_cache()
     out: dict = {q.qid: [] for q in queries}
-    for s, base, dl, rows_for, frame in _driver_shards(index, hashes,
-                                                        stats.shard_span):
+    for s, base, dl, rows_for in _driver_shards(index, hashes,
+                                                 stats.shard_span):
         for qid, pairs in _score_shard(queries, stats, k, mode, dl, base,
-                                       rows_for, frame, tomb=tomb,
-                                       tf_cache=tfc, shard=s):
+                                       rows_for, tomb=tomb, tf_cache=tfc,
+                                       shard=s):
             out[qid].extend(pairs)
     for pairs in out.values():
         pairs.sort(key=lambda e: (-e[1], e[0]))
@@ -1528,7 +1510,7 @@ def _driver_score(
 
 def _score_shard(
     queries: list[_Query], stats: IndexStats, k: int, mode: str,
-    dl: np.ndarray, base: int, rows_for, frame,
+    dl: np.ndarray, base: int, rows_for,
     tomb: np.ndarray | None = None,
     require_dl: bool = False,
     tf_cache: "_ByteLRU | None" = None,
@@ -1537,8 +1519,8 @@ def _score_shard(
     """The one per-shard scorer, called by the driver loop and the
     executor plan alike: every query of ``queries`` over one shard,
     ``[(qid, pairs)]`` with each query's shard-local top k.
-    ``rows_for(term_hash)`` gives a term's block columns here (dense),
-    ``frame()`` the shard's posting rows (WAND, ``pairs_fn``). Dense
+    ``rows_for(term_hash)`` gives a term's :class:`_Blocks` here (or
+    None), the one input of dense, WAND and a ``pairs_fn``. Dense
     queries share one decode cache, so each term's blocks decode, and
     their idf-free partial computes, once per shard (see
     :func:`_score_dense`). ``tomb`` (sorted tombstoned doc_ids) is
@@ -1560,14 +1542,14 @@ def _score_shard(
                 term_fns=q.term_fns, tomb=tomb,
             )
         elif q.algorithm == "wand":
-            pairs = _score_wand(frame(), dl, base, q.terms, k1, b, avgdl, k,
-                                required, after=q.after, term_fns=q.term_fns,
-                                tomb=tomb)
+            pairs = _score_wand(rows_for, dl, base, q.terms, k1, b, avgdl,
+                                k, required, after=q.after,
+                                term_fns=q.term_fns, tomb=tomb)
         else:
             dead = _shard_tombstones(tomb, base, dl.shape[0])
             dead = set() if dead is None else set(dead.tolist())
             pairs = [
-                (d, s) for d, s in q.algorithm(frame(), dl, base)
+                (d, s) for d, s in q.algorithm(rows_for, dl, base)
                 if d not in dead and (not require_dl or dl[d - base] > 0)
             ]
         out.append((q.qid, pairs))
@@ -1618,9 +1600,9 @@ def _topk_pairs(
     if n > max(4 * k, 64):
         part = np.argpartition(-scores, k - 1)[:k]
         kth = scores[part].min()
-        above = np.flatnonzero(scores > kth)          # < k rows, all in
+        above = (scores > kth).nonzero()[0]           # < k rows, all in
         need = k - above.size
-        at = np.flatnonzero(scores == kth)            # boundary ties
+        at = (scores == kth).nonzero()[0]             # boundary ties
         if at.size > need:
             sel = np.argpartition(doc_ids[at], need - 1)[:need]
             at = at[sel]
@@ -1641,22 +1623,6 @@ def _shard_tombstones(tomb, base: int, span: int) -> np.ndarray | None:
     return tomb[lo:hi] if hi > lo else None
 
 
-def _block_columns(left: pd.DataFrame):
-    """``rows_for`` over one shard's posting-row frame: the frame's
-    columns are pulled out as NumPy arrays once, and each term's rows
-    are a boolean take on those arrays — no pandas indexing per term.
-    Returns ``term_hash -> (doc_id blobs, tf blobs, n_docs,
-    first_doc_id)`` or None for a term with no rows here."""
-    hashes = left["term_hash"].to_numpy(np.int64)
-    cols = _block_arrays(left)
-
-    def rows_for(th):
-        m = hashes == th
-        return tuple(c[m] for c in cols) if m.any() else None
-
-    return rows_for
-
-
 def _score_dense(
     rows_for, dl: np.ndarray, base: int,
     ordered_terms: list[tuple[int, str, float]],
@@ -1671,8 +1637,7 @@ def _score_dense(
     tomb: np.ndarray | None = None,
 ) -> list[tuple[int, float]]:
     """Dense accumulator over one shard. ``rows_for(term_hash)``
-    returns the term's block columns in this shard
-    (:func:`_block_arrays`) or None.
+    returns the term's :class:`_Blocks` in this shard or None.
     ``tomb`` (sorted tombstoned doc_ids, whole index) is an
     eligibility mask applied before top-k selection, like ``after``."""
     span = dl.shape[0]
@@ -1700,9 +1665,9 @@ def _score_dense(
         if got is None:
             dt = None if tf_cache is None else tf_cache.get((th, shard))
             if dt is None:
-                cols = rows_for(th)
-                if cols is not None:
-                    d, t, _ = codec.decode_blocks(*cols)
+                blocks = rows_for(th)
+                if blocks is not None:
+                    d, t, _ = blocks.decode()
                     dt = (d - base, t)
                 else:
                     dt = ()
@@ -1733,7 +1698,7 @@ def _score_dense(
     dead = _shard_tombstones(tomb, base, span)
     if dead is not None:
         nterms[dead - base] = 0  # tombstoned: matches nothing
-    idx = np.flatnonzero(nterms >= required if required else nterms)
+    idx = (nterms >= required if required else nterms).nonzero()[0]
     if require_dl:
         # filtered search: the dl page holds ONLY eligible docs, so a
         # zero entry means "filtered out" (a doc with postings always
@@ -1752,23 +1717,22 @@ class _TermBlocks:
     Storing the raw pair (instead of a precomputed partial) frees the
     index builder from needing avgdl before encoding."""
 
-    __slots__ = ("term", "idf", "fn", "rows", "firsts", "ends", "ubs",
+    __slots__ = ("term", "idf", "fn", "blocks", "firsts", "ends", "ubs",
                  "_cache")
 
-    def __init__(self, term: str, idf: float, grp: pd.DataFrame,
+    def __init__(self, term: str, idf: float, blocks: _Blocks,
                  k1: float, b: float, avgdl: float, shard_end: int,
                  fn=None):
-        grp = grp.sort_values("block_id")
         self.term = term
         self.idf = idf
         self.fn = fn
-        self.rows = list(grp.itertuples(index=False))
-        self.firsts = grp["first_doc_id"].to_numpy(np.int64)
+        self.blocks = blocks
+        self.firsts = blocks.first_doc_id
         # block i's doc range is [firsts[i], firsts[i+1]); the last
         # block is open-ended to the shard boundary
         self.ends = np.append(self.firsts[1:], np.int64(shard_end))
-        mt = grp["max_tf"].to_numpy(np.float64)
-        md = grp["min_dl"].to_numpy(np.float64)
+        mt = blocks.max_tf.astype(np.float64)
+        md = blocks.min_dl.astype(np.float64)
         if fn is not None:
             # pluggable similarity: the contribution is monotone in
             # (tf up, dl down) by ranking.py's contract, so the same
@@ -1784,17 +1748,16 @@ class _TermBlocks:
     def decode(self, bi: int) -> tuple[np.ndarray, np.ndarray]:
         got = self._cache.get(bi)
         if got is None:
-            row = self.rows[bi]
-            n = int(row.n_docs)
-            d = codec.decode_doc_ids(bytes(row.doc_ids), n=n,
-                                     base=int(row.first_doc_id))
-            t = codec.decode_tfs(bytes(row.tfs), n=n)
+            n = int(self.blocks.n_docs[bi])
+            d = codec.decode_doc_ids(bytes(self.blocks.doc_ids[bi]), n=n,
+                                     base=int(self.firsts[bi]))
+            t = codec.decode_tfs(bytes(self.blocks.tfs[bi]), n=n)
             got = self._cache[bi] = (d, t)
         return got
 
 
 def _score_wand(
-    left: pd.DataFrame, dl: np.ndarray, base: int,
+    rows_for, dl: np.ndarray, base: int,
     ordered_terms: list[tuple[int, str, float]],
     k1: float, b: float, avgdl: float, k: int,
     required: int = 0,
@@ -1831,14 +1794,13 @@ def _score_wand(
     Worst case (uniform bounds, e.g. a single head term) degrades to
     dense-scorer throughput, never to per-doc Python.
     """
-    hashes = left["term_hash"].to_numpy(np.int64)
     shard_end = base + dl.shape[0]
     terms: list[_TermBlocks] = []
     for th, term, idf in ordered_terms:
-        grp = left[hashes == th]
-        if len(grp):
+        blocks = rows_for(th)
+        if blocks is not None:
             terms.append(_TermBlocks(
-                term, idf, grp, k1, b, avgdl, shard_end,
+                term, idf, blocks, k1, b, avgdl, shard_end,
                 fn=None if term_fns is None else term_fns[th],
             ))
     if not terms or (required and len(terms) < required):
@@ -1869,7 +1831,7 @@ def _score_wand(
     # (a doc there cannot contain all terms — its postings would be in
     # blocks covering its own id)
     eligible = (
-        np.flatnonzero(seg_cover >= required) if required
+        (seg_cover >= required).nonzero()[0] if required
         else np.arange(n_seg)
     )
     if not eligible.size:
@@ -1908,7 +1870,7 @@ def _score_wand(
         if dead is not None:
             d0, d1 = np.searchsorted(dead, (lo, hi))
             ntouch[dead[d0:d1] - lo] = 0  # tombstoned: not a candidate
-        idx = np.flatnonzero(ntouch >= required) if required else np.flatnonzero(ntouch)
+        idx = (ntouch >= required if required else ntouch).nonzero()[0]
         if not idx.size:
             continue
         cand_scores = acc[idx]

@@ -124,11 +124,11 @@ def test_probe_tf_matches_postings(imp_index):
     head, _, _ = _query_set(ix)
     lm = ix.lexicon_map()
     th = lm[head[0]]["hash"]
-    f = ix.postings_rows_by_term([th])[th]
+    f = ix.postings_rows_by_term([th])[th].blocks
     d, t, _ = codec.decode_blocks(
-        f["doc_ids"].tolist(), f["tfs"].tolist(),
-        f["n_docs"].to_numpy(np.int64),
-        f["first_doc_id"].to_numpy(np.int64),
+        f.doc_ids.tolist(), f.tfs.tolist(),
+        f.n_docs.astype(np.int64),
+        f.first_doc_id.astype(np.int64),
     )
     order = np.argsort(d)
     d, t = d[order], t[order]

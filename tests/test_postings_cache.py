@@ -1,8 +1,10 @@
-"""Driver-serving hot-postings LRU cache (``Index.postings_rows``).
+"""Driver-serving hot-postings LRU cache
+(``Index.postings_rows_by_term``) and the one postings splitter.
 
 Web query logs are Zipfian, so the driver serving path pins
-recently-probed posting rows per Index (the search-node page-cache
-analog). These tests pin the cache's contract:
+recently-probed postings per Index (the search-node page-cache
+analog), each term as NumPy block columns. These tests pin the
+cache's contract:
 
   * hot (cached) queries are rank- AND score-identical to the
     cache-off path (``SPARK_GRAFT_POSTINGS_CACHE_MB=0``) and to the
@@ -14,19 +16,25 @@ analog). These tests pin the cache's contract:
   * tombstones land AFTER the cache (masked inside the shard scorer,
     which still selects exactly k), so a delete between two probes of
     the same hot term is respected;
-  * absent terms cache an empty frame (a repeated OOV miss must not
-    re-read parquet every time).
+  * absent terms cache an empty entry (a repeated OOV miss must not
+    re-read parquet every time);
+  * the driver read (an Arrow table) and an executor shard's group
+    (its pandas frame) split into identical block columns, in (shard,
+    block_id) order whatever order the rows arrive in.
 """
 
 from __future__ import annotations
 
 import math
+import os
 
+import numpy as np
 import pytest
 
 from hadoop_search_engine_spark.operators.index_build import build_index
 from hadoop_search_engine_spark.operators.query_exec import (
     Index,
+    _postings_entries,
     phrase_search,
     search_topk,
     search_topk_batch,
@@ -151,7 +159,7 @@ def test_eviction_under_tiny_budget_is_invisible(
             got = _pairs(search_topk(idx, q, k=5, serving="driver"))
             _same(got, oracle.search(q, k=5), f"tiny-budget {q}")
             if idx._pcache:
-                assert idx._pcache_nbytes <= cap
+                assert idx._pcache.nbytes <= cap
 
 
 def test_delete_after_warm_cache_is_respected(
@@ -184,11 +192,57 @@ def test_absent_term_caches_empty_frame(spark, cache_setup, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_POSTINGS_CACHE_MB", "64")
     idx = Index.load(spark, out)
     bogus = 123456789
-    pdf = idx.postings_rows([bogus])
+    pdf = idx.postings_rows_by_term([bogus])[bogus].blocks.n_docs
     assert len(pdf) == 0
-    assert bogus in idx._pcache and len(idx._pcache[bogus][0]) == 0
+    assert bogus in idx._pcache and len(idx._pcache.get(bogus).shards) == 0
     # second probe is a pure cache hit (no dataset read path: the
     # entry stays, bytes unchanged)
-    n = idx._pcache_nbytes
-    pdf2 = idx.postings_rows([bogus])
-    assert len(pdf2) == 0 and idx._pcache_nbytes == n
+    n = idx._pcache.nbytes
+
+    def no_read():
+        raise AssertionError("a cached miss must not read parquet")
+
+    monkeypatch.setattr(idx, "_postings_dataset", no_read)
+    pdf2 = idx.postings_rows_by_term([bogus])[bogus].blocks.n_docs
+    assert len(pdf2) == 0 and idx._pcache.nbytes == n
+
+
+def _same_blocks(got, want):
+    for name, g, w in zip(want._fields, got, want):
+        if w.dtype == object:
+            assert list(g) == list(w), name
+        else:
+            assert g.dtype == w.dtype and np.array_equal(g, w), name
+
+
+def test_one_splitter_for_arrow_table_and_pandas_frame(spark, cache_setup):
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+
+    out, _ = cache_setup
+    ds = pads.dataset(os.path.join(out, "postings"), format="parquet",
+                      partitioning="hive")
+    # the positional term with the most blocks, as the driver reads it
+    hashes, counts = np.unique(
+        ds.to_table(columns=["term_hash"])["term_hash"].to_numpy(),
+        return_counts=True)
+    th = int(hashes[np.argmax(counts)])
+    table = ds.to_table(filter=pads.field("term_hash") == th)
+    assert table.num_rows >= 2
+    assert table["positions"].null_count == 0
+    want = _postings_entries(table, [th])[th]
+    # (shard, block_id) order, whatever order the read came back in
+    sb = sorted(zip(table["shard"].to_pylist(),
+                    table["block_id"].to_pylist(),
+                    table["first_doc_id"].to_pylist()))
+    assert want.blocks.first_doc_id.tolist() == [f for _, _, f in sb]
+    assert sorted(want.shards) == sorted({s for s, _, _ in sb})
+    reversed_rows = table.take(pa.array(np.arange(table.num_rows)[::-1]))
+    for label, src in (("pandas", table.to_pandas()),
+                       ("reversed", reversed_rows)):
+        got = _postings_entries(src, [th])[th]
+        _same_blocks(got.blocks, want.blocks)
+        assert got.nbytes == want.nbytes, label
+        assert sorted(got.shards) == sorted(want.shards), label
+        for s, view in want.shards.items():
+            _same_blocks(got.shards[s], view)
