@@ -477,7 +477,9 @@ def _probe_tf(
 
     ``direct`` (the beyond-norms-limit serving mode): fetch posting
     rows through a shard-filtered pyarrow read — only the shards a
-    probed doc lives in are listed/read — split by the same
+    probed doc lives in are listed/read, and ``positions`` (on a
+    positional index the largest column, never needed for a tf) is
+    projected away as a null column — split by the same
     :func:`~.query_exec._postings_entries`, instead of the per-term
     LRU (which pulls the term's WHOLE df-sized postings; fine on a hot
     serving node with pinned norms, wrong past the driver limit where
@@ -486,6 +488,7 @@ def _probe_tf(
     if want.shape[0] == 0:
         return out
     if direct:
+        import pyarrow as pa
         import pyarrow.dataset as pads
 
         nb = index.stats.n_buckets
@@ -497,9 +500,14 @@ def _probe_tf(
             & (pads.field("term_hash") == int(th))
             & pads.field("shard").isin(wshards)
         )
-        p = _postings_entries(
-            index._postings_dataset().to_table(filter=filt), [int(th)]
-        )[int(th)]
+        t = index._postings_dataset().to_table(
+            filter=filt,
+            columns=["term_hash", "shard", "block_id", "n_bytes",
+                     "first_doc_id", "n_docs", "doc_ids", "tfs",
+                     "max_tf", "min_dl"],
+        )
+        t = t.append_column("positions", pa.nulls(t.num_rows))
+        p = _postings_entries(t, [int(th)])[int(th)]
     else:
         p = index.postings_rows_by_term([th])[int(th)]
     wshard = want // index.stats.shard_span

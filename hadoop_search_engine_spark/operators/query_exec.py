@@ -53,6 +53,7 @@ from __future__ import annotations
 
 import os
 import re
+from collections import OrderedDict
 from dataclasses import dataclass
 from typing import NamedTuple
 
@@ -188,7 +189,7 @@ class _ByteLRU:
 
     def __init__(self, cap: int):
         self.cap = cap
-        self._d: dict = {}  # insertion order is recency order
+        self._d: OrderedDict = OrderedDict()
         self.nbytes = 0
 
     def __len__(self) -> int:
@@ -198,10 +199,10 @@ class _ByteLRU:
         return key in self._d
 
     def get(self, key):
-        hit = self._d.pop(key, None)
+        hit = self._d.get(key)
         if hit is None:
             return None
-        self._d[key] = hit  # now the most recent
+        self._d.move_to_end(key)
         return hit[0]
 
     def put(self, key, value, nbytes: int | None = None) -> None:
@@ -212,7 +213,8 @@ class _ByteLRU:
         self._d[key] = (value, n)
         self.nbytes += n
         while self.nbytes > self.cap and self._d:
-            self.nbytes -= self._d.pop(next(iter(self._d)))[1]
+            _, (_, n0) = self._d.popitem(last=False)
+            self.nbytes -= n0
 
 
 # Postings-LRU charge per cell (an int64 value or a blob pointer in

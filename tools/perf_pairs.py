@@ -1,10 +1,10 @@
 """Alternating parent/change pairs of the repo benchmark.
 
     python3 tools/perf_pairs.py --base HEAD~1 [--pairs 10]
-        [--workloads serve_hot,refresh] [--seconds 12]
 
-Runs ``perfbench/run.py`` (untraced) N times per workload on each of
-two checkouts: the *parent* — the committed files of ``--base``,
+Runs ``perfbench/run.py`` (untraced, 12 s, the same runs as ``make
+perf``) N times for each of the ``serve_hot`` and ``refresh`` workloads
+on each of two checkouts: the *parent* — the committed files of ``--base``,
 extracted with ``git archive`` under ``.perfbench_work/`` — and the
 *change*, this checkout as it stands. Pair i uses seed i for both
 sides, and which side runs first alternates from pair to pair, so the
@@ -29,6 +29,8 @@ import tarfile
 import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+WORKLOADS = ("serve_hot", "refresh")
+SECONDS = 12
 
 
 def _parent_checkout(ref: str) -> str:
@@ -49,12 +51,12 @@ def _parent_checkout(ref: str) -> str:
     return dest
 
 
-def _run(checkout: str, workload: str, seed: int, seconds: float) -> dict:
+def _run(checkout: str, workload: str, seed: int) -> dict:
     """One untraced run; its last-line JSON, or a failed record when
     the run produced none."""
     cmd = [sys.executable, os.path.join(checkout, "perfbench", "run.py"),
            "--workload", workload, "--seed", str(seed),
-           "--seconds", str(seconds), "--trace", "0"]
+           "--seconds", str(SECONDS), "--trace", "0"]
     proc = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
     for line in reversed(proc.stdout.splitlines()):
         if line.startswith("{"):
@@ -75,26 +77,23 @@ def main(argv: list[str]) -> int:
     ap.add_argument("--base", required=True,
                     help="git ref of the parent side")
     ap.add_argument("--pairs", type=int, default=10)
-    ap.add_argument("--workloads", default="serve_hot,refresh")
-    ap.add_argument("--seconds", type=float, default=12)
     args = ap.parse_args(argv)
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         e2e = json.load(f)["end_to_end"]
     sides = {"parent": _parent_checkout(args.base), "change": ROOT}
-    workloads = args.workloads.split(",")
-    runs: dict = {w: {"parent": [], "change": []} for w in workloads}
+    runs: dict = {w: {"parent": [], "change": []} for w in WORKLOADS}
     for seed in range(1, args.pairs + 1):
         order = ["parent", "change"] if seed % 2 else ["change", "parent"]
-        for w in workloads:
+        for w in WORKLOADS:
             for side in order:
-                got = _run(sides[side], w, seed, args.seconds)
+                got = _run(sides[side], w, seed)
                 runs[w][side].append(got)
                 p50 = got["metrics"].get("query_p50_ms", {}).get("value")
                 print(f"pair {seed} {w} {side}: failed={got['failed']} "
                       f"query_p50_ms={p50}", flush=True)
 
-    for w in workloads:
+    for w in WORKLOADS:
         print(f"\n{w} ({args.pairs} pairs; median [q1, q3]; change "
               "better in n pairs)")
         for side in ("parent", "change"):
