@@ -11,7 +11,7 @@
 PKG := hadoop_search_engine_spark
 DIST := dist/$(PKG).zip
 
-.PHONY: package test bench perf perf-pairs scaling contract clean
+.PHONY: package test bench perf perf-trace perf-pairs scaling contract clean
 
 package:
 	mkdir -p dist
@@ -32,6 +32,14 @@ bench:
 perf:
 	for w in serve_hot refresh; do \
 		python3 perfbench/run.py --workload $$w --seed 1 --seconds 12 --trace 0 || exit 1; \
+	done
+
+# The same runs traced (`--trace 1`): per-layer metrics such as
+# postings_fetch_ms and postings_parquet_reads, the evidence a
+# performance claim needs beside the alternating pairs.
+perf-trace:
+	for w in serve_hot refresh; do \
+		python3 perfbench/run.py --workload $$w --seed 1 --seconds 12 --trace 1 || exit 1; \
 	done
 
 # Alternating parent/change pairs of the same two workloads:

@@ -476,14 +476,16 @@ def _probe_tf(
     not a df-sized one.
 
     ``direct`` (the beyond-norms-limit serving mode): fetch posting
-    rows through a shard-filtered pyarrow read — only the shards a
-    probed doc lives in are listed/read, and ``positions`` (on a
-    positional index the largest column, never needed for a tf) is
-    projected away as a null column — split by the same
-    :func:`~.query_exec._postings_entries`, instead of the per-term
-    LRU (which pulls the term's WHOLE df-sized postings; fine on a hot
-    serving node with pinned norms, wrong past the driver limit where
-    df can be corpus-scale)."""
+    rows through a shard-filtered pyarrow read — the files are sorted
+    by term_hash, so row-group statistics limit it to the row groups
+    holding the term, only the rows of the shards a probed doc lives
+    in are kept, and ``positions`` (on a positional index the largest
+    column, never needed for a tf) is projected away as a null column
+    — split by the same :func:`~.query_exec._postings_entries`,
+    instead of the per-term LRU (which pulls the term's WHOLE
+    df-sized postings and its row-group range; fine on a hot serving
+    node with pinned norms, wrong past the driver limit where df can
+    be corpus-scale)."""
     out = np.zeros(want.shape[0], dtype=np.int64)
     if want.shape[0] == 0:
         return out

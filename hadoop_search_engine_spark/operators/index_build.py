@@ -31,7 +31,10 @@ physical design for 10^12 documents:
     ``max(tf*(k1+1)/(tf + k1*(1-b+b*dl/avgdl)))`` (multiplied by idf
     at query time, so df statistics are not needed inside the encoder);
   * postings are written partitioned by ``bucket = hash(term) % B``
-    so a query's term lookups prune to B^-1 of the files;
+    so a query's term lookups prune to B^-1 of the files, and each
+    file is sorted by (term_hash, shard, block_id), so its row-group
+    term_hash min/max statistics prune a lookup to the row groups
+    that hold the term;
   * the build runs in ``n_waves`` bucket waves, each an independent
     distributed job that commits its partition directories plus a
     checkpoint row (terms/blocks/postings/tokens/bytes counters) —
@@ -909,9 +912,13 @@ def _run_waves(
         ).sortWithinPartitions(*(["term_hash", "packed"] + (["pos"] if with_pos else [])))
         blocks = sorted_events.mapInPandas(encoder, schema=POSTINGS_SCHEMA)
         mark(f"wave{wave_id}_plan")
+        # `bucket` leads the sort so it satisfies partitionBy's required
+        # ordering: otherwise Spark plans its own bucket-only sort in
+        # place of this one and each file is interleaved term_hash runs,
+        # whose row-group min/max statistics then never prune.
         (
             blocks.repartition("bucket", "term_hash")
-            .sortWithinPartitions("term_hash", "shard", "block_id")
+            .sortWithinPartitions("bucket", "term_hash", "shard", "block_id")
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("bucket")

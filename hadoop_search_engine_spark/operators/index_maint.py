@@ -247,12 +247,13 @@ def vacuum_index(index: Index) -> Index:
     rewriter = _make_vacuum_rewriter(bool(stats.positions), tomb_bc)
     (
         # column order pinned to the schema: the rewriter's fast path
-        # passes untouched rows through positionally
+        # passes untouched rows through positionally; files come out
+        # term-sorted, as build_index writes them
         spark.read.parquet(postings_dir)
         .select(*_POSTINGS_COLUMNS)
         .mapInPandas(rewriter, schema=POSTINGS_SCHEMA)
         .repartition("bucket", "term_hash")
-        .sortWithinPartitions("term_hash", "shard", "block_id")
+        .sortWithinPartitions("bucket", "term_hash", "shard", "block_id")
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(tmp_postings)

@@ -19,11 +19,13 @@ over the sharded block index, whatever the call:
     term's decode), WAND (segment-vectorized, theta-pruned) or a
     ``pairs_fn`` (phrase, boolean) — with the ``after`` cursor and the
     tombstone mask applied before top-k selection.
-  * driver loop (:func:`_driver_score`): bucket-pruned pyarrow reads
-    of the probed postings, split straight from the Arrow table into
-    per-term NumPy block columns (:class:`_Postings`, no pandas) and
-    kept in the per-Index hot LRU (:meth:`Index.postings_rows_by_term`),
-    then the scorer once per shard — no Spark job. It serves the
+  * driver loop (:func:`_driver_score`): the probed postings come
+    from the per-Index LRU (:meth:`Index.postings_rows_by_term`) as
+    per-term NumPy block columns (:class:`_Postings`, no pandas). A
+    miss is one bucket- and row-group-pruned pyarrow read over the
+    term-sorted files; the row-group range it decodes stays in the
+    same LRU as Arrow, so later misses inside it need no read. Then
+    the scorer runs once per shard — no Spark job. It serves the
     ``*_rows`` functions and every ``serving="driver"`` (or small-index
     ``"auto"``) call.
   * executor plan (:func:`_execute`): one pruned postings scan grouped
@@ -51,6 +53,8 @@ are bit-identical to its queries' single calls.
 
 from __future__ import annotations
 
+import functools
+import operator
 import os
 import re
 from collections import OrderedDict
@@ -156,7 +160,10 @@ TOMBSTONE_OVERFETCH_MAX = 10_000
 # listing), keyed by term_hash; entries are the term's stored block
 # columns (:class:`_Postings`: blobs still encoded, parameter-free
 # (max_tf, min_dl) block bounds), so tuned k1/b queries and the
-# tombstone mask reuse them unchanged.
+# tombstone mask reuse them unchanged. The same budget also holds the
+# term-sorted row-group ranges that misses read (Arrow tables keyed by
+# (bucket, lo, hi), charged their Arrow size), so a cold node decodes
+# each range once instead of once per missed term.
 POSTINGS_CACHE_MB_DEFAULT = 256.0
 
 # Second-level driver cache: DECODED (offsets, tf) arrays per
@@ -183,7 +190,9 @@ def _postings_cache_bytes() -> int:
 class _ByteLRU:
     """Byte-bounded LRU (the driver-side postings and decode caches).
     An entry is charged ``nbytes`` when given, else the summed
-    ``nbytes`` of its NumPy arrays; a budget <= 0 retains nothing."""
+    ``nbytes`` of its NumPy arrays; a budget <= 0 retains nothing. An
+    entry charged more than the whole budget is not kept and evicts
+    nothing (it would flush the cache, then itself)."""
 
     __slots__ = ("cap", "_d", "nbytes")
 
@@ -210,6 +219,8 @@ class _ByteLRU:
             return
         n = nbytes if nbytes is not None else (
             sum(int(a.nbytes) for a in value) if value else 0)
+        if n > self.cap:
+            return
         self._d[key] = (value, n)
         self.nbytes += n
         while self.nbytes > self.cap and self._d:
@@ -300,6 +311,16 @@ def _postings_entries(src, hashes) -> dict[int, _Postings]:
     return out
 
 
+def _take_terms(table, th: np.ndarray, hashes) -> dict[int, _Postings]:
+    """Entries of ``hashes`` from posting rows sorted by term_hash
+    (``th``, their term_hash column): each term's rows found by
+    searchsorted, one take, the one splitter."""
+    hs = np.array(hashes, dtype=np.int64)
+    lo, hi = np.searchsorted(th, hs), np.searchsorted(th, hs, "right")
+    rows = np.concatenate([np.arange(a, b) for a, b in zip(lo, hi)])
+    return _postings_entries(table.take(rows), hashes)
+
+
 def _rows_for(entries: dict, shard: int):
     """``rows_for`` of one shard over split postings: ``term_hash ->``
     the term's :class:`_Blocks` view in ``shard``, or None."""
@@ -322,6 +343,7 @@ class Index:
     _tomb: object = None
     _tomb_n: int | None = None
     _pcache: object = None
+    _rgs: dict | None = None
     _tfc: object = None
 
     _token_fn: object = None
@@ -480,17 +502,15 @@ class Index:
         """Postings of the probed term hashes, driver-side (no Spark
         job), one :class:`_Postings` PER TERM — its block columns in
         (shard, block_id) order with per-shard views, the one form
-        every scorer reads: bucket = pmod(hash, B) prunes at the hive
-        file listing, term_hash is a row-group min/max filter, and the
-        Arrow table is split straight into NumPy columns
-        (:func:`_postings_entries`, no pandas). Entries are cached per
-        term in a byte-bounded :class:`_ByteLRU` charged from the blob
-        lengths (see ``POSTINGS_CACHE_MB_DEFAULT``), so repeated
-        probes of hot terms skip parquet entirely; an uncached query
-        costs ONE dataset read for all of its missing terms. Cache
-        lifetime is this Index instance — the same snapshot semantics
-        as the cached dataset listing itself (vacuum/merge return a
-        reloaded Index)."""
+        every scorer reads. Entries are cached per term in a
+        byte-bounded :class:`_ByteLRU` charged from the blob lengths
+        (see ``POSTINGS_CACHE_MB_DEFAULT``), so repeated probes of hot
+        terms skip parquet entirely. A miss is served from a kept
+        row-group range when one covers it, else by ONE dataset read
+        for all of the query's uncovered terms (:meth:`_read_postings`).
+        Cache lifetime is this Index instance — the same snapshot
+        semantics as the cached dataset listing itself (vacuum/merge
+        return a reloaded Index)."""
         wanted = list(dict.fromkeys(int(h) for h in hit_hashes))
         if self._pcache is None:
             self._pcache = _ByteLRU(_postings_cache_bytes())
@@ -506,18 +526,104 @@ class Index:
                 out[h] = p
         return out
 
+    def _row_groups(self, bucket: int):
+        """``bucket``'s postings row groups from the parquet footers,
+        read once per Index: their ``term_hash`` (min, max) statistics,
+        byte sizes, and the ``(lo, hi)`` ranges of the bucket kept in
+        the postings LRU (see :meth:`_read_postings`)."""
+        if self._rgs is None:
+            self._rgs = {}
+        if bucket not in self._rgs:
+            import pyarrow.dataset as pads
+
+            lo, hi, size = [], [], []
+            for frag in self._postings_dataset().get_fragments(
+                    filter=pads.field("bucket") == bucket):
+                md = frag.metadata
+                col = md.schema.names.index("term_hash")
+                for i in range(md.num_row_groups):
+                    rg = md.row_group(i)
+                    st = rg.column(col).statistics
+                    known = st is not None and st.has_min_max
+                    lo.append(st.min if known else np.iinfo(np.int64).min)
+                    hi.append(st.max if known else np.iinfo(np.int64).max)
+                    size.append(rg.total_byte_size)
+            self._rgs[bucket] = (np.array(lo, np.int64),
+                                 np.array(hi, np.int64),
+                                 np.array(size, np.int64), [])
+        return self._rgs[bucket]
+
     def _read_postings(self, hashes: list[int]) -> dict[int, _Postings]:
-        """ONE pruned pyarrow read of ``hashes`` -> per-term entries
-        (:func:`_postings_entries`), absent terms included."""
+        """Per-term entries of ``hashes`` (:func:`_postings_entries`),
+        absent terms included, with at most ONE pruned pyarrow read.
+
+        Files are sorted by term_hash within each ``bucket =
+        pmod(hash, B)`` dir, so a term's rows sit in the row groups
+        whose footer (min, max) covers its hash, and the read decodes
+        those row groups whole anyway. A miss therefore reads its
+        bucket's rows in the union of those ranges, sorts them once by
+        (term_hash, shard, block_id) and keeps them, as Arrow, in the
+        postings LRU: this miss and every later one inside a kept range
+        is a searchsorted + take into that table. A hash no row group
+        covers is absent without a read; a range whose row groups
+        outweigh the LRU budget is not widened — its hashes are read
+        exactly, in the same call."""
         import pyarrow.dataset as pads
 
         nb = self.stats.n_buckets
-        filt = pads.field("bucket").isin(
-            sorted({h % nb for h in hashes})
-        ) & pads.field("term_hash").isin(hashes)
-        return _postings_entries(
-            self._postings_dataset().to_table(filter=filt), hashes
-        )
+        hits: dict = {}  # kept range -> (its table, hashes it serves)
+        ranges, exact, absent = [], [], []
+        for h in hashes:
+            b = h % nb
+            mins, maxs, size, held = self._row_groups(b)
+            for lo, hi in list(held):
+                if lo <= h <= hi:
+                    unit = self._pcache.get((b, lo, hi))
+                    if unit is not None:
+                        hits.setdefault((b, lo, hi), (unit, []))[1].append(h)
+                        break
+                    held.remove((lo, hi))  # evicted
+            else:
+                cover = (mins <= h) & (h <= maxs)
+                if not cover.any():
+                    absent.append(h)
+                elif size[cover].sum() > self._pcache.cap:
+                    exact.append(h)
+                else:
+                    ranges.append((b, int(mins[cover].min()),
+                                   int(maxs[cover].max())))
+        ds = self._postings_dataset()
+        out = {}
+        if absent:
+            out = _postings_entries(ds.schema.empty_table(), absent)
+        for unit, hs in hits.values():
+            out.update(_take_terms(*unit, hs))
+        units: list[list[int]] = []  # overlapping ranges of a bucket coalesce
+        for b, lo, hi in sorted(ranges):
+            if units and units[-1][0] == b and lo <= units[-1][2]:
+                units[-1][2] = max(units[-1][2], hi)
+            else:
+                units.append([b, lo, hi])
+        filt = [(pads.field("bucket") == b) & (pads.field("term_hash") >= lo)
+                & (pads.field("term_hash") <= hi) for b, lo, hi in units]
+        if exact:
+            filt.append(pads.field("bucket").isin(sorted({h % nb for h in exact}))
+                        & pads.field("term_hash").isin(exact))
+        if not filt:
+            return out
+        t = ds.to_table(filter=functools.reduce(operator.or_, filt))
+        th = t["term_hash"].to_numpy()
+        order = np.lexsort((t["block_id"].to_numpy(), t["shard"].to_numpy(), th))
+        t, th = t.take(order), th[order]
+        for b, lo, hi in units:
+            i, j = np.searchsorted(th, lo), np.searchsorted(th, hi, "right")
+            rows = np.arange(i, j)[th[i:j] % nb == b]
+            unit = (t.take(rows), th[rows])
+            self._pcache.put((b, lo, hi), unit, unit[0].nbytes + unit[1].nbytes)
+            if (b, lo, hi) in self._pcache:
+                self._rgs[b][3].append((lo, hi))
+        out.update(_take_terms(t, th, [h for h in hashes if h not in out]))
+        return out
 
     def warm(self, top_terms: int = 0) -> dict:
         """Serving-node startup warm-up — the analog of the reference
@@ -544,7 +650,7 @@ class Index:
             hashes = [int(v["hash"]) for _, v in hot[:top_terms]]
             if hashes:
                 self.postings_rows_by_term(hashes)
-                out["terms_cached"] = len(self._pcache)
+                out["terms_cached"] = sum(h in self._pcache for h in hashes)
                 out["postings_cache_bytes"] = int(self._pcache.nbytes)
         return out
 

@@ -159,6 +159,42 @@ def test_probe_tf_direct_matches_lru_path(imp_index):
     assert a.sum() > 0  # the probe actually found postings
 
 
+def test_probe_tf_direct_reads_no_positions(spark, tmp_path, monkeypatch):
+    """On a positional index the direct read projects ``positions``
+    (its largest column) away, with tfs identical to the LRU path."""
+    from hadoop_search_engine_spark.corpus import gen_documents
+    from hadoop_search_engine_spark.operators.doc_ids import assign_doc_ids
+
+    docs = assign_doc_ids(
+        gen_documents(spark, 200, n_partitions=2), num_partitions=2
+    ).select("doc_id", "text")
+    out = str(tmp_path / "pos")
+    build_index(spark, docs, out, num_shards=2, n_buckets=4,
+                block_size=16, positions=True)
+    ix = Index.load(spark, out)
+    head, _, _ = _query_set(ix)
+    th = ix.lexicon_map()[head[0]]["hash"]
+    want = np.arange(0, int(ix.stats.num_shards * ix.stats.shard_span),
+                     3, dtype=np.int64)
+    a = _probe_tf(ix, th, want, direct=False)
+    columns = []
+    ds = ix._postings_dataset()
+
+    class Recording:
+        def to_table(self, **kwargs):
+            columns.append(kwargs.get("columns"))
+            return ds.to_table(**kwargs)
+
+        def __getattr__(self, name):
+            return getattr(ds, name)
+
+    monkeypatch.setattr(ix, "_postings_dataset", Recording)
+    c = _probe_tf(ix, th, want, direct=True)
+    assert len(columns) == 1 and columns[0] is not None
+    assert "positions" not in columns[0]
+    assert np.array_equal(a, c) and a.sum() > 0
+
+
 def test_k1_b_override_identity(imp_index):
     """Tuned (k1, b) reuse the sidecar through the parameter-free
     (rest_max_tf, rest_min_dl) bound — looser, so fallback is

@@ -7,6 +7,11 @@ external posting-list merge of the classic design (Lucene merges)."""
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
+
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -16,6 +21,7 @@ from hadoop_search_engine_spark.operators.index_maint import (
     merge_indexes,
     segment_offsets,
     shift_doc_ids,
+    vacuum_index,
 )
 from hadoop_search_engine_spark.operators.query_exec import (
     Index,
@@ -71,6 +77,32 @@ def merged_and_fresh(spark, seg_corpora, tmp_path_factory):
     build_index(spark, union_docs.select("doc_id", "text"), str(root / "fresh"),
                 shard_span=SPAN, n_buckets=8, block_size=16)
     return merged, Index.load(spark, str(root / "fresh")), union_docs
+
+
+def _assert_term_sorted(index_dir):
+    files = glob.glob(os.path.join(index_dir, "postings", "bucket=*", "*.parquet"))
+    assert files
+    for f in files:
+        t = pq.read_table(f, columns=["term_hash", "shard", "block_id"])
+        th, sh, bid = (t[c].to_numpy() for c in t.column_names)
+        # plain comparisons: np.diff overflows on int64 hashes
+        up_th, eq_th = th[1:] > th[:-1], th[1:] == th[:-1]
+        up_sh, eq_sh = sh[1:] > sh[:-1], sh[1:] == sh[:-1]
+        ok = up_th | (eq_th & (up_sh | (eq_sh & (bid[1:] >= bid[:-1]))))
+        assert ok.all(), f"{f} is not sorted by (term_hash, shard, block_id)"
+
+
+def test_postings_files_are_term_sorted(spark, merged_and_fresh, tmp_path):
+    """Build, merge and vacuum each write every postings file sorted by
+    (term_hash, shard, block_id), so row-group statistics prune."""
+    merged, fresh, _ = merged_and_fresh
+    _assert_term_sorted(fresh.out_dir)
+    _assert_term_sorted(merged.out_dir)
+    mine = str(tmp_path / "vac")
+    shutil.copytree(merged.out_dir, mine)
+    ix = Index.load(spark, mine)
+    delete_docs(ix, list(range(0, 600, 7)))
+    _assert_term_sorted(vacuum_index(ix).out_dir)
 
 
 def test_merged_postings_byte_identical_to_fresh_union_build(merged_and_fresh):

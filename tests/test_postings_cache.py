@@ -20,7 +20,13 @@ cache's contract:
     re-read parquet every time);
   * the driver read (an Arrow table) and an executor shard's group
     (its pandas frame) split into identical block columns, in (shard,
-    block_id) order whatever order the rows arrive in.
+    block_id) order whatever order the rows arrive in;
+  * a miss keeps the row-group range its read decodes, so probing
+    every term of one bucket in turn costs ONE parquet read, with
+    answers identical to cache-off and the oracle; a range larger than
+    the budget is read exactly and never kept;
+  * an entry larger than the whole budget is not kept and evicts
+    nothing.
 """
 
 from __future__ import annotations
@@ -34,10 +40,12 @@ import pytest
 from hadoop_search_engine_spark.operators.index_build import build_index
 from hadoop_search_engine_spark.operators.query_exec import (
     Index,
+    _ByteLRU,
     _postings_entries,
     phrase_search,
     search_topk,
     search_topk_batch,
+    search_topk_rows,
 )
 from hadoop_search_engine_spark.oracle.bm25_oracle import BM25Oracle
 
@@ -246,3 +254,100 @@ def test_one_splitter_for_arrow_table_and_pandas_frame(spark, cache_setup):
         assert sorted(got.shards) == sorted(want.shards), label
         for s, view in want.shards.items():
             _same_blocks(got.shards[s], view)
+
+
+def test_oversized_put_keeps_the_cache():
+    lru = _ByteLRU(100)
+    for i in range(5):
+        lru.put(i, None, 15)
+    lru.put("big", None, 150)
+    assert "big" not in lru
+    assert len(lru) == 5 and lru.nbytes == 75
+    lru.put(5, None, 40)  # an ordinary put still evicts oldest first
+    assert 0 not in lru and 5 in lru and lru.nbytes == 100
+
+
+class _CountingDataset:
+    """The postings dataset with every ``to_table`` call recorded."""
+
+    def __init__(self, ds, reads):
+        self._ds, self._reads = ds, reads
+
+    def to_table(self, *args, **kwargs):
+        self._reads.append(kwargs)
+        return self._ds.to_table(*args, **kwargs)
+
+    def __getattr__(self, name):
+        return getattr(self._ds, name)
+
+
+def _counting(idx, monkeypatch):
+    reads: list = []
+    orig = idx._postings_dataset
+    monkeypatch.setattr(idx, "_postings_dataset",
+                        lambda: _CountingDataset(orig(), reads))
+    return reads
+
+
+def test_kept_range_serves_every_later_miss_of_its_bucket(
+    spark, cache_setup, monkeypatch, tmp_path
+):
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from hadoop_search_engine_spark.operators.index_maint import delete_docs
+
+    out, oracle = cache_setup
+    mine = str(tmp_path / "idx")
+    shutil.copytree(out, mine)
+    dead = {2, 6}
+    base = Index.load(spark, mine)
+    delete_docs(base, sorted(dead))
+    live = {d for d, _ in ROWS} - dead
+    nb = base.stats.n_buckets
+    by_bucket: dict[int, list] = {}
+    for term, v in base.lexicon_map().items():
+        by_bucket.setdefault(v["bucket"], []).append((term, v["hash"]))
+    b = max(by_bucket, key=lambda k: len(by_bucket[k]))
+    terms = sorted(by_bucket[b])
+    assert len(terms) >= 3
+    known = {h for _, h in terms}
+    # an absent hash of the same bucket, inside its row-group range
+    absent = next(h for h in range(min(known) + nb, max(known), nb)
+                  if h not in known)
+
+    def run(idx):
+        return {t: search_topk_rows(idx, t, k=5) for t, _ in terms}
+
+    monkeypatch.setenv("SPARK_GRAFT_POSTINGS_CACHE_MB", "0")
+    off = run(Index.load(spark, mine))
+    for t, _ in terms:
+        _same(off[t], oracle.search(t, k=5, allowed=live), f"{t} oracle")
+
+    monkeypatch.setenv("SPARK_GRAFT_POSTINGS_CACHE_MB", "64")
+    idx = Index.load(spark, mine)
+    reads = _counting(idx, monkeypatch)
+    assert run(idx) == off
+    assert len(idx.postings_rows_by_term([absent])[absent].shards) == 0
+    assert len(reads) == 1, "every term of the bucket after the first is a kept-range hit"
+    # outside the bucket's hash range no row group covers it: no read
+    outside = (max(known) + nb if max(known) < 2**63 - nb
+               else min(known) - nb)
+    assert len(idx.postings_rows_by_term([outside])[outside].shards) == 0
+    assert len(reads) == 1
+
+    # a budget under the bucket's footer byte size: every probe is an
+    # exact read, no range is kept and earlier entries are not flushed
+    bdir = os.path.join(mine, "postings", f"bucket={b}")
+    mds = [pq.ParquetFile(os.path.join(bdir, f)).metadata
+           for f in os.listdir(bdir) if f.endswith(".parquet")]
+    unit = sum(md.row_group(i).total_byte_size
+               for md in mds for i in range(md.num_row_groups))
+    monkeypatch.setenv("SPARK_GRAFT_POSTINGS_CACHE_MB", str((unit - 1) / (1 << 20)))
+    idx = Index.load(spark, mine)
+    reads = _counting(idx, monkeypatch)
+    assert run(idx) == off
+    assert len(reads) == len(terms)
+    assert all(isinstance(k, int) for k in idx._pcache._d)
+    assert terms[-1][1] in idx._pcache and idx._pcache.nbytes <= idx._pcache.cap
